@@ -19,18 +19,17 @@ Mirrors ``src/retrieval/search_engine.py``'s surface:
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import threading
 from typing import Any, Callable
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multimodal_vector_db_spark.embedders.fake import fake_embed_numpy
-from multimodal_vector_db_spark.operators.knn import (
-    knn_search,
-    knn_search_blocked,
-)
+from multimodal_vector_db_spark.operators import knn
 from multimodal_vector_db_spark.operators.rerank import rerank
 from multimodal_vector_db_spark.sources.corpus import (
     active,
@@ -80,6 +79,128 @@ def _serialized_mutation(fn):
     return wrapper
 
 
+#: payload keys of a resident row (``_ITEMS_SCHEMA`` minus the vector
+#: and its width) — what ``batch_ingest`` appends to a resident block
+_PAYLOAD_COLS = ("id", "modality", "space", "deleted", "content", "display_name")
+
+#: estimated fixed driver-side bytes per resident row beyond the
+#: measured string payload (id/flags + Python dict/object overhead)
+_ROW_OVERHEAD_BYTES = 64
+
+
+def _payload_bytes(payload: dict[str, Any]) -> int:
+    """Estimated resident bytes of one payload dict — the per-row twin
+    of the build-time footprint agg (string octet lengths + overhead)."""
+    return _ROW_OVERHEAD_BYTES + sum(
+        len(v.encode("utf-8")) for v in payload.values() if isinstance(v, str)
+    )
+
+
+def _rows_bytes(payload: list[dict[str, Any]], dim: int) -> int:
+    """Estimated resident bytes of rows: payload plus float64 vectors."""
+    return sum(map(_payload_bytes, payload)) + len(payload) * dim * 8
+
+
+def _capacity(n: int) -> int:
+    """Backing-buffer rows for a resident block of ``n`` live rows.
+    Geometric headroom, so appends (the first one after a remove too)
+    land in place and a copy happens only on growth — amortized
+    O(rows appended). The unused tail is never written, so its pages
+    are never faulted in: headroom costs address space, not RSS."""
+    return int(n * 1.5) + 8
+
+
+@dataclasses.dataclass(frozen=True)
+class _ResidentBlock:
+    """One space's LIVE rows held on the driver for the micro-path:
+    ``ids`` / float64 ``emb`` / ``modality`` are the first ``len(ids)``
+    rows of backing buffers with append capacity (``bufs``),
+    ``payload`` the row dicts, ``bytes`` the estimated resident
+    footprint the block was admitted at, ``epoch`` the corpus epoch it
+    reflects. Replace-not-mutate: :meth:`extend` and :meth:`without`
+    return a new block and never write a row an existing block can
+    see, so a concurrent reader keeps a consistent view. Fields also
+    read by key (``block["ids"]``)."""
+
+    epoch: int
+    ids: np.ndarray
+    emb: np.ndarray
+    modality: np.ndarray
+    payload: list
+    bytes: int
+    bufs: tuple
+
+    def __getitem__(self, key: str) -> Any:
+        return getattr(self, key)
+
+    @classmethod
+    def _over(cls, epoch, bufs, n, payload, nbytes) -> "_ResidentBlock":
+        return cls(epoch, *(b[:n] for b in bufs), payload, nbytes, bufs)
+
+    @classmethod
+    def build(
+        cls, epoch, ids, emb, modality, payload, nbytes, rows=None, cap=0
+    ) -> "_ResidentBlock":
+        """A block over the columns' ``rows`` (all when None), copied
+        into fresh buffers of at least ``cap`` rows with headroom."""
+        n = len(ids) if rows is None else len(rows)
+        cap = max(cap, _capacity(n))
+        bufs = (
+            np.empty(cap, np.int64),
+            np.empty((cap, emb.shape[1]), np.float64),
+            np.empty(cap, object),
+        )
+        for buf, col in zip(bufs, (ids, emb, modality)):
+            if rows is None:
+                buf[:n] = col
+            else:  # gather straight into the buffer, no temporary
+                np.take(col, rows, axis=0, out=buf[:n], mode="clip")
+        return cls._over(epoch, bufs, n, payload, nbytes)
+
+    def restamp(self, epoch: int) -> "_ResidentBlock":
+        return dataclasses.replace(self, epoch=epoch)
+
+    def extend(self, epoch, ids, emb, modality, payload, nbytes):
+        """Append rows in the buffers' spare tail (readers' views end
+        before it); grow by copying only when the tail is full."""
+        n, m = len(self.ids), len(ids)
+        bufs = self.bufs
+        if n + m > len(bufs[0]):
+            bufs = self.build(
+                epoch, self.ids, self.emb, self.modality, [], 0,
+                cap=_capacity(n + m),
+            ).bufs
+        for buf, col in zip(bufs, (ids, emb, modality)):
+            buf[n : n + m] = col
+        return self._over(epoch, bufs, n + m, self.payload + payload, nbytes)
+
+    def without(self, epoch: int, drop, dim: int) -> "_ResidentBlock":
+        """The block minus the rows whose id is in ``drop``, copied into
+        buffers with headroom so the next append stays in place."""
+        hit = np.isin(self.ids, np.asarray(drop, dtype=np.int64))
+        if not hit.any():
+            return self.restamp(epoch)
+        keep = np.nonzero(~hit)[0]
+        gone = [self.payload[i] for i in np.nonzero(hit)[0]]
+        return self.build(
+            epoch, self.ids, self.emb, self.modality,
+            [self.payload[i] for i in keep],
+            self.bytes - _rows_bytes(gone, dim),
+            rows=keep,
+        )
+
+
+@dataclasses.dataclass(frozen=True)
+class _Route:
+    """One search's routing decision — see ``MultiModalSearchEngine._route``."""
+
+    route: str  # exact-local | exact-hof | exact-blocked | ivf
+    reason: str
+    nprobe: int | None = None
+    extras: dict = dataclasses.field(default_factory=dict)
+    block: _ResidentBlock | None = None  # what an exact-local route serves
+
+
 class MultiModalSearchEngine:
     #: corpus_rows × dim above which BATCH scoring routes through the
     #: blocked BLAS form. Measured crossover (local[32], this box): at
@@ -95,6 +216,10 @@ class MultiModalSearchEngine:
     #: winning at 22.7M cells (536 vs 620 ms facade wall).
     BLOCKED_THRESHOLD_CELLS = 2_000_000
 
+    #: share of the index the appended rows must reach before the
+    #: cumulative drift latch applies (see ``cum_drift_threshold``)
+    CUM_DRIFT_MASS_FRACTION = 0.25
+
     def __init__(
         self,
         spark: SparkSession,
@@ -107,7 +232,6 @@ class MultiModalSearchEngine:
         local_exact_budget_bytes: int = 256 * 1024 * 1024,
         recalibration_fraction: float = 0.25,
         cum_drift_threshold: float | None = None,
-        cum_drift_mass_fraction: float = 0.25,
         defer_recalibration: bool = False,
         local_max_concurrency: int = 16,
     ):
@@ -208,9 +332,9 @@ class MultiModalSearchEngine:
         #: agg instead of re-measuring (any mutation bumps the epoch)
         self._local_over_budget: dict[str, int] = {}
         #: per-space driver cache for the micro-path: space →
-        #: {epoch, ids, emb, modality, payload}; dropped whenever the
-        #: corpus epoch moves past the cached one
-        self._local_cache: dict[str, dict[str, Any]] = {}
+        #: _ResidentBlock; stale once the corpus epoch moves past the
+        #: block's own
+        self._local_cache: dict[str, _ResidentBlock] = {}
         #: derived cross-space structures for the compare micro-path
         #: (concatenated ids, per-modality selections) — same epoch
         #: contract as _local_cache
@@ -239,17 +363,15 @@ class MultiModalSearchEngine:
         #: past ~16 callers is not BLAS (clamped to 1 thread/call) but
         #: GIL-held result assembly — 64 runnable threads thrash GIL
         #: ownership and HALVE aggregate qps vs 16; parking the excess
-        #: keeps throughput flat at any caller count. 0/None disables.
-        self._local_gate = (
-            threading.BoundedSemaphore(local_max_concurrency)
-            if local_max_concurrency
-            else None
-        )
+        #: keeps throughput flat at any caller count.
+        if local_max_concurrency < 1:
+            raise ValueError("local_max_concurrency must be >= 1")
+        self._local_gate = threading.BoundedSemaphore(local_max_concurrency)
         #: CUMULATIVE drift latch (round 10): per-batch `drift` only
         #: sees the latest batch, so many batches each marginally below
         #: ``drift_threshold`` never latch even when the appended mass
         #: collectively no longer fits the fitted cells. Once appended
-        #: rows exceed ``cum_drift_mass_fraction`` of the index, the
+        #: rows exceed ``CUM_DRIFT_MASS_FRACTION`` of the index, the
         #: appended-mass-weighted mean ratio is ALSO checked against
         #: this tighter threshold (default: halfway between perfect fit
         #: and the per-batch limit — a large mass is held to a stricter
@@ -259,7 +381,6 @@ class MultiModalSearchEngine:
             if cum_drift_threshold is None
             else cum_drift_threshold
         )
-        self.cum_drift_mass_fraction = cum_drift_mass_fraction
 
     #: interactive mutations between lazy lineage compactions
     _COMPACT_EVERY = 64
@@ -555,8 +676,6 @@ class MultiModalSearchEngine:
         micro-path caches are PRUNED in place (tombstoned rows leave
         the active view), so interleaved remove/search stays
         collect-free like the ingest path."""
-        import numpy as np
-
         self._transform_items(
             lambda cur: cur.withColumn(
                 "deleted",
@@ -567,27 +686,11 @@ class MultiModalSearchEngine:
         )
         prev_epoch = self._epoch
         self._epoch += 1
-        drop = np.array(sorted(set(ids)), dtype=np.int64)
-        for space, cached in list(self._local_cache.items()):
-            if cached["epoch"] != prev_epoch:
-                continue  # already stale — rebuilds lazily
-            hit = np.isin(cached["ids"], drop)
-            keep = np.nonzero(~hit)[0]
-            pruned = [cached["payload"][i] for i in keep]
-            freed = sum(
-                self._row_payload_bytes(cached["payload"][i])
-                for i in np.nonzero(hit)[0]
-            ) + int(hit.sum()) * self.dim * 8
-            # replace-not-mutate: concurrent readers holding the old
-            # block keep a consistent (pre-mutation) view
-            self._local_cache[space] = {
-                "epoch": self._epoch,
-                "ids": cached["ids"][keep],
-                "emb": cached["emb"][keep],
-                "modality": cached["modality"][keep],
-                "payload": pruned,
-                "bytes": cached.get("bytes", 0) - freed,
-            }
+        for space, block in list(self._local_cache.items()):
+            if block.epoch == prev_epoch:  # stale ones rebuild lazily
+                self._local_cache[space] = block.without(
+                    self._epoch, ids, self.dim
+                )
         self._maybe_compact_lineage()
 
     # -- ANN route (SURVEY §4's deferred planner rule, rounds 8-9) ------
@@ -1162,7 +1265,7 @@ class MultiModalSearchEngine:
         (KMeans trainingCost / N), and (round 10) the
         appended-mass-weighted CUMULATIVE ratio is checked against the
         tighter ``cum_drift_threshold`` once appended rows exceed
-        ``cum_drift_mass_fraction`` of the index — a stream of batches
+        ``CUM_DRIFT_MASS_FRACTION`` of the index — a stream of batches
         each marginally under the per-batch limit can collectively
         stop fitting the cells, and the per-batch statistic alone
         never sees that. A ratio above ``drift_threshold``
@@ -1256,7 +1359,7 @@ class MultiModalSearchEngine:
                     info["drifted"] = True
                 elif (
                     info["appended_rows"]
-                    >= self.cum_drift_mass_fraction * max(target, 1)
+                    >= self.CUM_DRIFT_MASS_FRACTION * max(target, 1)
                     and info["cum_drift"] > self.cum_drift_threshold
                 ):
                     info["drifted"] = True
@@ -1446,30 +1549,106 @@ class MultiModalSearchEngine:
         space: str,
         recall_floor: float,
         route: str,
-        approximate: bool,
-        threshold_cells: int | None = None,
         scorer: str = "auto",
+        approximate: bool = False,
         filter_key: str | None = None,
         has_predicate: bool = False,
         batch: bool = False,
-    ) -> tuple[bool, str, int | None, dict[str, Any]]:
-        """The auto planner: IVF iff the caller declared slack
+    ) -> _Route:
+        """The ONE route decision for :meth:`search` and
+        :meth:`search_batch`, recorded on ``last_route`` here and only
+        here. The driver-resident block is checked FIRST: when the
+        space fits ``local_exact_budget_bytes`` and the call is
+        expressible driver-side (``scorer="auto"``, route not forced to
+        IVF, no Column predicate, not the binary tier) the route is
+        ``exact-local`` — exact, so it honors any floor, and it never
+        runs index upkeep (auto-append, recalibration). Otherwise
+        :meth:`_plan_ann` decides exact vs IVF and the exact scorer
+        follows the size×dim dispatch (the batch threshold for
+        batches, 8× it for single queries — ``_single_threshold``)."""
+        block = None
+        if (
+            scorer == "auto"
+            and route != "ivf"
+            and not approximate
+            and not has_predicate
+        ):
+            block = self._local_corpus(space)
+        if block is not None:
+            mb = block.bytes / (1024 * 1024)
+            d = _Route(
+                "exact-local",
+                f"{space!r} corpus {len(block.ids)} rows × dim {self.dim}: "
+                f"~{mb:.1f} MB estimated resident footprint (vectors "
+                "+ payload strings) within local_exact_budget — driver-"
+                "resident exact scan (same BLAS kernel + tie-break as "
+                "the blocked scorer, no per-job scheduling floor; "
+                "exact, so any recall floor is honored)",
+                block=block,
+            )
+        else:
+            threshold = (
+                self.blocked_threshold_cells
+                if batch
+                else self._single_threshold()
+            )
+            nprobe, why, extras = self._plan_ann(
+                space, recall_floor, route, scorer, approximate,
+                filter_key, has_predicate, batch, threshold,
+            )
+            if nprobe is not None:
+                extras = {
+                    "nprobe": nprobe,
+                    "n_clusters": len(self._ann[space]["centroids"]),
+                    **extras,
+                }
+                d = _Route("ivf", why, nprobe, extras)
+            else:
+                blocked = scorer == "blocked" or (
+                    scorer == "auto"
+                    and not approximate  # shortlist already capped it
+                    and self._corpus_rows() * self.dim >= threshold
+                )
+                d = _Route(
+                    "exact-blocked" if blocked else "exact-hof", why,
+                    extras=extras,
+                )
+        self.last_route = {
+            "route": d.route,
+            "reason": d.reason,
+            "recall_floor": recall_floor,
+            **d.extras,
+        }
+        return d
+
+    def _plan_ann(
+        self,
+        space: str,
+        recall_floor: float,
+        route: str,
+        scorer: str,
+        approximate: bool,
+        filter_key: str | None,
+        has_predicate: bool,
+        batch: bool,
+        threshold_cells: int,
+    ) -> tuple[int | None, str, dict[str, Any]]:
+        """The exact-vs-IVF planner: IVF iff the caller declared slack
         (recall_floor < 1), an index covering the current corpus
         exists (post-build ingests are absorbed by auto-append), the
         index can MEET the floor on its measured curve, and IVF is the
-        measured-cheaper path (calibrated timings; size threshold as
-        the uncalibrated fallback — ``threshold_cells`` defaults to
-        the single-query size×dim threshold; ``search_batch`` passes
-        the batch one). An explicit exact ``scorer`` wins over the
-        approximate route — ``scorer="blocked"``/``"hof"`` is the
-        documented exact-parity surface and must never silently return
-        approximate results. Returns (use_ivf, reason, nprobe, extras)
-        — the reason is logged on ``last_route`` either way, with any
-        per-decision annotations (calibration cost/deferral) in the
-        returned ``extras`` dict. Extras are a RETURN value, not
-        instance state: the facade serves concurrent searches, and a
-        shared mutable attribute would let two calls cross-contaminate
-        each other's ``last_route`` annotations."""
+        measured-cheaper path (calibrated timings; the size×dim
+        ``threshold_cells`` as the uncalibrated fallback). An explicit
+        exact ``scorer`` wins over the approximate route —
+        ``scorer="blocked"``/``"hof"`` is the documented exact-parity
+        surface and must never silently return approximate results.
+        Returns (nprobe — None for exact, reason, extras) — the reason
+        is logged on ``last_route`` either way, with any per-decision
+        annotations (calibration cost/deferral) in the returned
+        ``extras`` dict. Extras are a RETURN value, not instance state:
+        the facade serves concurrent searches, and a shared mutable
+        attribute would let two calls cross-contaminate each other's
+        ``last_route`` annotations."""
         extras: dict[str, Any] = {}
         if route == "ivf":
             if scorer != "auto":
@@ -1504,19 +1683,18 @@ class MultiModalSearchEngine:
                 # forced route is honored; probe every cell (exhaustive
                 # IVF) rather than silently under-delivering the floor
                 nprobe = len(self._ann[space]["centroids"])
-            return True, "forced", nprobe, extras
+            return nprobe, "forced", extras
         if route != "auto":
-            return False, "forced-exact", None, extras
+            return None, "forced-exact", extras
         if scorer != "auto":
             return (
-                False,
+                None,
                 f"explicit scorer={scorer!r} forces the exact path "
                 "(exact-parity surface wins over route)",
-                None,
                 extras,
             )
         if approximate:
-            return False, "binary-shortlist requested", None, extras
+            return None, "binary-shortlist requested", extras
         if has_predicate:
             # arbitrary-Column-predicate honesty: recall under a
             # predicate the engine cannot enumerate is unmeasurable, so
@@ -1525,16 +1703,16 @@ class MultiModalSearchEngine:
             # (vector_index.py:129); our exact path pushes the
             # predicate below the scan instead. (A content-type filter
             # CAN route IVF — from its own measured curve; see below.)
-            return False, (
+            return None, (
                 "explicit Column predicate present — recall under an "
                 "arbitrary predicate is unmeasured, so the exact path "
                 "honors the floor"
-            ), None, extras
+            ), extras
         if recall_floor >= 1.0:
-            return False, "recall_floor=1.0 requires exact", None, extras
+            return None, "recall_floor=1.0 requires exact", extras
         info = self._ann.get(space)
         if info is None:
-            return False, f"no ANN index for space {space!r}", None, extras
+            return None, f"no ANN index for space {space!r}", extras
 
         def _drift_reason() -> str:
             return (
@@ -1543,7 +1721,7 @@ class MultiModalSearchEngine:
             )
 
         if info["drifted"]:
-            return False, _drift_reason(), None, extras
+            return None, _drift_reason(), extras
         # Coverage maintenance and calibration staleness run BEFORE the
         # floor/cost gates (round-10 review fix): a STALE curve can fail
         # the floor or cost gate in exactly the situations a refresh
@@ -1557,14 +1735,14 @@ class MultiModalSearchEngine:
             if self.ann_auto_append:
                 self.append_to_ann_index(space)
                 if info["drifted"]:  # this append latched it
-                    return False, _drift_reason(), None, extras
+                    return None, _drift_reason(), extras
             else:
-                return False, (
+                return None, (
                     "corpus changed since ANN build "
                     f"({info['rows_at_build']} -> "
                     f"{self._space_rows(space)} rows in {space!r}); "
                     "append_to_ann_index or rebuild to re-enable"
-                ), None, extras
+                ), extras
         # once the live corpus has outgrown the calibrated one by
         # recalibration_fraction, refresh the measured curve on the
         # CURRENT corpus (appended ids enter the xxhash64 query sample
@@ -1595,12 +1773,12 @@ class MultiModalSearchEngine:
                 extras["calibration_deferred"] = True
                 extras["n_deferred_serves"] = info["n_deferred_serves"]
                 extras["deferred_since"] = info["deferred_since"]
-                return False, (
+                return None, (
                     "calibration curve stale (corpus outgrew it by > "
                     f"{self.recalibration_fraction:.0%}); recalibration "
                     "deferred to maintain() — exact serves and honors "
                     "the floor"
-                ), None, extras
+                ), extras
             prefix = ""
         else:
             recal_sec = self._maybe_recalibrate(space, info)
@@ -1615,18 +1793,18 @@ class MultiModalSearchEngine:
             # top-k into cells nprobe may skip). A filter with its OWN
             # measured curve (build_ann_index(calibration_filters=…) /
             # calibrate_filter) routes from it below; others stay exact.
-            return False, (
+            return None, (
                 f"content-type filter {filter_key!r} has no measured "
                 "calibration curve — calibrate_filter() to enable "
                 "filtered IVF; exact honors the floor"
-            ), None, extras
+            ), extras
         nprobe, ivf_ms, plan_why = self._ivf_plan(
             space, recall_floor, batch=batch, filter_key=filter_key
         )
         if nprobe is None:
-            return False, (
+            return None, (
                 f"{prefix}{plan_why} — exact honors the floor"
-            ), None, extras
+            ), extras
         cal = self._curve_for(info, filter_key)
         why_cost = ""
         if cal is not None and ivf_ms is not None:
@@ -1641,26 +1819,18 @@ class MultiModalSearchEngine:
             )
             depth = "batch" if batch else "single-query"
             if ivf_ms >= exact_ms:
-                return False, (
+                return None, (
                     f"{prefix}measured cost ({depth}): ivf {ivf_ms:.2f}"
                     f" >= exact {exact_ms:.2f} ms — exact is the "
                     "cheaper way to honor the floor"
-                ), None, extras
+                ), extras
             why_cost = (
                 f"; measured {depth} ivf {ivf_ms:.2f} < exact "
                 f"{exact_ms:.2f} ms"
             )
-        else:
-            if threshold_cells is None:
-                threshold_cells = self._single_threshold()
-            if self._space_rows(space) * self.dim < threshold_cells:
-                return (
-                    False,
-                    "below size threshold — exact scan is cheap",
-                    None,
-                    extras,
-                )
-        return True, f"auto ({prefix}{plan_why}{why_cost})", nprobe, extras
+        elif self._space_rows(space) * self.dim < threshold_cells:
+            return None, "below size threshold — exact scan is cheap", extras
+        return nprobe, f"auto ({prefix}{plan_why}{why_cost})", extras
 
     # -- search (search_engine.py:174-223) -----------------------------
     def search(
@@ -1740,131 +1910,57 @@ class MultiModalSearchEngine:
         )
         diversity = strategy not in (None, "distance")
         fetch_n = max(k * 4, 20) if diversity else k
-        # driver-resident exact micro-path: when the space fits the
-        # local budget, a single interactive query is served in-process
-        # (exact — honors any floor — so it preempts the IVF planner
-        # too: sub-ms beats any Spark job here). An explicit scorer=,
-        # a forced route="ivf", a Column predicate (not evaluable
-        # driver-side) or the binary tier keep the Spark paths.
-        if (
-            scorer == "auto"
-            and route != "ivf"
-            and not approximate
-            and predicate is None
-        ):
-            local = self._search_local(
-                space,
-                qvec,
-                k,
-                fetch_n,
-                filter_content_type,
-                strategy,
-                recall_floor,
-            )
-            if local is not None:
-                return local
-        corpus = active(self.items).where(F.col("space") == space)
-        if filter_content_type is not None:
-            corpus = corpus.where(F.col("modality") == filter_content_type)
+        d = self._route(
+            space,
+            recall_floor,
+            route,
+            scorer,
+            approximate=approximate,
+            filter_key=filter_content_type,
+            has_predicate=predicate is not None,
+        )
+        if d.block is not None:
+            rows = self._local_topk(
+                d.block, [qvec], fetch_n, filter_content_type, diversity
+            )[0]
+            return rerank(rows, strategy=strategy, top_k=k)
+        corpus = self._space_corpus(space, filter_content_type)
         if predicate is not None:
             corpus = corpus.filter(predicate)
         if approximate:
             corpus = self._binary_shortlist(corpus, qvec, shortlist)
-        use_ivf, why, nprobe, extras = self._route(
-            space,
-            recall_floor,
-            route,
-            approximate,
-            scorer=scorer,
-            filter_key=filter_content_type,
-            has_predicate=predicate is not None,
-        )
-        if use_ivf:
-            from multimodal_vector_db_spark.operators.ann import (
-                ivf_search_blocked,
-            )
-
-            info = self._ann[space]
-            self.last_route = {
-                "route": "ivf",
-                "reason": why,
-                "nprobe": nprobe,
-                "n_clusters": len(info["centroids"]),
-                "recall_floor": recall_floor,
-                **extras,
-            }
-            # join the slim (id, cluster_id) assignment back so
-            # tombstones/predicates applied to `corpus` above hold;
-            # MLlib-fitted centroids → probe by the SAME l2 rule
-            assigned = corpus.select("id", "embedding").join(
-                info["assign"], "id"
-            )
-            winner_rows = ivf_search_blocked(
-                assigned,
-                [(0, [float(x) for x in qvec])],
-                info["centroids"],
-                k=fetch_n,
-                nprobe=nprobe,
-                probe_metric="l2",
-            ).collect()
-            winner_rows.sort(key=lambda r: (-r["sim"], r["id"]))
-            ids = [r["id"] for r in winner_rows]
-            sims = {r["id"]: r["sim"] for r in winner_rows}
-            pay = [
-                c
-                for c in corpus.columns
-                if c not in ("embedding", "dim", "id")
+        if d.route == "exact-hof":
+            # diversity reranking needs the candidates' vectors: carry
+            # the embedding column THROUGH the top-k as a payload column
+            # (the same single-plan shape as q_mmr_rerank) instead of a
+            # second re-fetch job — one Spark action per search
+            payload = [
+                c for c in corpus.columns if c not in ("embedding", "dim")
             ]
             if diversity:
-                pay.append("embedding")
-            fetched = self._fetch_payload(corpus, ids, pay)
-            rows = [
-                {**fetched[i], "id": i, "sim": sims[i]}
-                for i in ids
-                if i in fetched
-            ]
-            return rerank(rows, strategy=strategy, top_k=k)
-        # diversity reranking needs the candidates' vectors: carry the
-        # embedding column THROUGH the top-k as a payload column (the
-        # same single-plan shape as q_mmr_rerank) instead of a second
-        # isin() re-fetch job — one Spark action per search, not two
-        payload = [c for c in corpus.columns if c not in ("embedding", "dim")]
-        if diversity:
-            payload.append("embedding")
-        use_blocked = scorer == "blocked" or (
-            scorer == "auto"
-            and not approximate  # shortlist already capped the corpus
-            and self._corpus_rows() * self.dim >= self._single_threshold()
-        )
-        self.last_route = {
-            "route": "exact-blocked" if use_blocked else "exact-hof",
-            "reason": why,
-            "recall_floor": recall_floor,
-            **extras,
-        }
-        if use_blocked:
-            # Two small actions, each the cheapest possible shape:
-            # 1. the scoring pass over a TWO-column scan —
-            #    ``TakeOrderedAndProject`` over ``partitions × k`` local
-            #    winners, collected (≤ fetch_n rows, already ranked);
-            # 2. a payload point-lookup with a LITERAL ``id IN (...)``
-            #    predicate — statically pushed to the parquet scan
-            #    (row-group min-max pruning), vector column pruned out
-            #    unless diversity needs it.
-            # (A single-plan broadcast-join variant measured WORSE here:
-            # the final orderBy added range-partitioning sample jobs —
-            # 4 full corpus scans per search instead of these 2 passes.)
-            winner_rows = knn_search_blocked(corpus, qvec, k=fetch_n).collect()
-            ids = [r["id"] for r in winner_rows]
-            sims = {r["id"]: r["sim"] for r in winner_rows}
-            pay = [c for c in payload if c != "id"]
-            fetched = self._fetch_payload(corpus, ids, pay)
-            rows = [
-                {**fetched[i], "sim": sims[i]} for i in ids if i in fetched
-            ]
-        else:
-            top = knn_search(corpus, qvec, k=fetch_n, payload_cols=payload)
+                payload.append("embedding")
+            top = knn.knn_search(corpus, qvec, k=fetch_n, payload_cols=payload)
             rows = [r.asDict() for r in top.collect()]
+        else:
+            # Two small actions, each the cheapest possible shape: the
+            # scoring pass over a TWO-column scan (blocked: a
+            # ``TakeOrderedAndProject`` over ``partitions × k`` local
+            # winners), then the payload point-lookup of
+            # :meth:`_with_payload`. (A single-plan broadcast-join
+            # variant measured WORSE here: the final orderBy added
+            # range-partitioning sample jobs — 4 full corpus scans per
+            # search instead of these 2 passes.)
+            pairs = (
+                self._ivf_pairs(corpus, space, [qvec], fetch_n, d.nprobe)
+                if d.route == "ivf"
+                else [
+                    (0, r["id"], r["sim"])
+                    for r in knn.knn_search_blocked(
+                        corpus, qvec, k=fetch_n
+                    ).collect()
+                ]
+            )
+            rows = self._with_payload(corpus, pairs, 1, diversity)[0]
         return rerank(rows, strategy=strategy, top_k=k)
 
     def search_batch(
@@ -1891,125 +1987,50 @@ class MultiModalSearchEngine:
         codegen'd broadcast-join form. Payload is point-fetched for the
         union of winner ids with one pushed ``IN`` predicate. Returns
         ``{query_index: [row dicts ranked by sim]}``."""
-        from multimodal_vector_db_spark.operators.knn import (
-            knn_join,
-            knn_join_blocked,
-        )
-
         space = query_space or SPACE_OF.get(filter_content_type or "text", "clip")
         qvecs = [
             self._embed(q, space) if isinstance(q, str) else q
             for q in queries
         ]
-        # driver-resident exact micro-path (same contract as search():
-        # explicit scorer / forced IVF keep the Spark paths)
-        if scorer == "auto" and route != "ivf":
-            local = self._search_batch_local(
-                space, qvecs, k, filter_content_type, recall_floor
-            )
-            if local is not None:
-                return local
-        corpus = active(self.items).where(F.col("space") == space)
-        if filter_content_type is not None:
-            corpus = corpus.where(F.col("modality") == filter_content_type)
-        # exact-vs-IVF planner, batch form — the path where IVF pays
-        # most (one pruned job amortizes over every query). Same
-        # contract as search(): recall_floor declares the slack, the
-        # decision is logged, drift falls back to exact. The batch
-        # size threshold is the BATCH one (not the 8× single-query
-        # one): with many queries the blocked/IVF crossover arrives
-        # earlier, matching the scorer dispatch below.
-        use_ivf, why, nprobe, extras = self._route(
+        # the batch form is where IVF pays most (one pruned job
+        # amortizes over every query); with many queries the blocked/IVF
+        # crossover arrives earlier, so the route uses the BATCH size
+        # threshold, not the 8× single-query one
+        d = self._route(
             space,
             recall_floor,
             route,
-            False,
-            threshold_cells=self.blocked_threshold_cells,
-            scorer=scorer,
+            scorer,
             filter_key=filter_content_type,
             batch=True,
         )
-        if use_ivf:
-            from multimodal_vector_db_spark.operators.ann import (
-                ivf_search_blocked,
-            )
-
-            info = self._ann[space]
-            self.last_route = {
-                "route": "ivf",
-                "reason": why,
-                "nprobe": nprobe,
-                "n_clusters": len(info["centroids"]),
-                "recall_floor": recall_floor,
-                **extras,
-            }
-            assigned = corpus.select("id", "embedding").join(
-                info["assign"], "id"
-            )
-            scored = ivf_search_blocked(
-                assigned,
-                [(i, [float(x) for x in v]) for i, v in enumerate(qvecs)],
-                info["centroids"],
-                k=k,
-                nprobe=nprobe,
-                probe_metric="l2",
-            )
-            pairs = sorted(
-                scored.collect(),
-                key=lambda r: (r["query_id"], -r["sim"], r["id"]),
-            )
-            ids = sorted({r["id"] for r in pairs})
-            pay = [
-                c
-                for c in corpus.columns
-                if c not in ("embedding", "dim", "id")
-            ]
-            fetched = self._fetch_payload(corpus, ids, pay)
-            out: dict[int, list[dict[str, Any]]] = {
-                i: [] for i in range(len(queries))
-            }
-            for r in pairs:
-                if r["id"] in fetched:
-                    out[r["query_id"]].append(
-                        {**fetched[r["id"]], "id": r["id"], "sim": r["sim"]}
-                    )
-            return out
-        use_blocked = scorer == "blocked" or (
-            scorer == "auto"
-            and self._corpus_rows() * self.dim >= self.blocked_threshold_cells
-        )
-        self.last_route = {
-            "route": "exact-blocked" if use_blocked else "exact-hof",
-            "reason": why,
-            "recall_floor": recall_floor,
-            **extras,
-        }
-        if use_blocked:
-            # vectors ride the task closure — no query-DF collect job
-            scored = knn_join_blocked(
-                corpus,
-                [(i, [float(x) for x in v]) for i, v in enumerate(qvecs)],
-                k=k,
-            )
-        else:
-            qdf = self.spark.createDataFrame(
-                [(i, [float(x) for x in v]) for i, v in enumerate(qvecs)],
-                "query_id long, q_emb array<double>",
-            )
-            scored = knn_join(corpus, qdf, k=k)
-        pairs = scored.select("query_id", "id", "sim", "rank").collect()
-        ids = sorted({r["id"] for r in pairs})
-        pay = [
-            c for c in corpus.columns if c not in ("embedding", "dim", "id")
-        ]
-        fetched = self._fetch_payload(corpus, ids, pay)
-        out: dict[int, list[dict[str, Any]]] = {i: [] for i in range(len(queries))}
-        for r in sorted(pairs, key=lambda r: (r["query_id"], r["rank"])):
-            if r["id"] in fetched:
-                out[r["query_id"]].append(
-                    {**fetched[r["id"]], "sim": r["sim"]}
+        if d.block is not None:
+            return dict(
+                enumerate(
+                    self._local_topk(d.block, qvecs, k, filter_content_type)
                 )
-        return out
+            )
+        corpus = self._space_corpus(space, filter_content_type)
+        if d.route == "ivf":
+            pairs = self._ivf_pairs(corpus, space, qvecs, k, d.nprobe)
+        else:
+            qs = [(i, [float(x) for x in v]) for i, v in enumerate(qvecs)]
+            if d.route == "exact-blocked":
+                # vectors ride the task closure — no query-DF collect job
+                scored = knn.knn_join_blocked(corpus, qs, k=k)
+            else:
+                qdf = self.spark.createDataFrame(
+                    qs, "query_id long, q_emb array<double>"
+                )
+                scored = knn.knn_join(corpus, qdf, k=k)
+            pairs = [
+                (r["query_id"], r["id"], r["sim"])
+                for r in sorted(
+                    scored.select("query_id", "id", "sim", "rank").collect(),
+                    key=lambda r: (r["query_id"], r["rank"]),
+                )
+            ]
+        return self._with_payload(corpus, pairs, len(qvecs))
 
     # -- content-based audio search (search_audio.py UX, torch-free) ----
     @_serialized_mutation
@@ -2141,169 +2162,107 @@ class MultiModalSearchEngine:
         )
 
     # -- driver-resident exact micro-path (round 10) --------------------
-    #: estimated fixed driver-side bytes per cached row beyond the
-    #: measured string payload (id/flags + Python dict/object overhead)
-    _LOCAL_ROW_OVERHEAD_BYTES = 64
-
-    def _row_payload_bytes(self, payload: dict[str, Any]) -> int:
-        """Estimated resident bytes of one cached payload dict — the
-        incremental twin of the build-time footprint agg (string
-        octet lengths + the per-row overhead constant)."""
-        return self._LOCAL_ROW_OVERHEAD_BYTES + sum(
-            len(v.encode("utf-8"))
-            for v in payload.values()
-            if isinstance(v, str)
-        )
+    _row_payload_bytes = staticmethod(_payload_bytes)
 
     def _local_cache_extend(
         self, prev_epoch: int, data: list[tuple]
     ) -> None:
-        """Absorb freshly ingested rows into still-valid per-space
-        driver caches IN PLACE (round 11 — the epoch-rebuild cost
-        contract): under a steady trickle of interactive ingests
-        interleaved with searches, the pre-round-11 engine re-collected
-        the whole space on every search. The appended block is built
-        from the SAME values a rebuild would collect (embeddings pass
-        through the float32 cast parquet/DataFrame storage applies, so
-        arrays stay bit-identical — parity-tested), the footprint
-        estimate grows by the same arithmetic as the build-time agg,
-        and a cache outgrowing the budget is dropped with an
-        over-budget verdict. Caches whose epoch is already stale are
-        left alone (they rebuild lazily). Replace-not-mutate, so
-        concurrent readers keep a consistent block.
+        """Absorb freshly ingested rows into still-valid resident blocks
+        (round 11 — the epoch-rebuild cost contract): under a steady
+        trickle of interactive ingests interleaved with searches, the
+        pre-round-11 engine re-collected the whole space on every
+        search. The appended rows hold the SAME values a rebuild would
+        collect (embeddings pass through the float32 cast DataFrame
+        storage applies, so arrays stay bit-identical — parity-tested),
+        the footprint estimate grows by the same arithmetic as the
+        build-time agg, and a block outgrowing the budget is dropped
+        with an over-budget verdict. Stale blocks are left alone (they
+        rebuild lazily); valid blocks of spaces this ingest did not
+        touch are restamped, since their rows did not change.
 
         ``data`` rows are ``_ITEMS_SCHEMA``-ordered tuples
         (id, modality, space, embedding, dim, deleted, content,
         display_name) — exactly what :meth:`batch_ingest` builds."""
-        import numpy as np
-
         if self.local_exact_budget_bytes <= 0 or not data:
             return
-        pay_cols = (
-            "id", "modality", "space", "deleted", "content",
-            "display_name",
-        )
         by_space: dict[str, list[tuple]] = {}
         for t in data:
             by_space.setdefault(t[2], []).append(t)
-        for space, ts in by_space.items():
-            cached = self._local_cache.get(space)
-            if cached is None or cached["epoch"] != prev_epoch:
+        for space, block in list(self._local_cache.items()):
+            if block.epoch != prev_epoch:
                 continue
-            payload = [
-                {
-                    "id": t[0],
-                    "modality": t[1],
-                    "space": t[2],
-                    "deleted": t[5],
-                    "content": t[6],
-                    "display_name": t[7],
-                }
-                for t in ts
-            ]
-            if cached["payload"] and set(cached["payload"][0]) != set(
-                pay_cols
-            ):
+            ts = by_space.get(space)
+            if ts is None:
+                self._local_cache[space] = block.restamp(self._epoch)
+                continue
+            if block.payload and set(block.payload[0]) != set(_PAYLOAD_COLS):
                 # payload schema drifted from the canonical columns
                 # (e.g. a corpus loaded with extra columns) — leave the
-                # cache stale and let the rebuild path re-collect
+                # block stale and let the rebuild path re-collect
                 continue
-            added = sum(
-                self._row_payload_bytes(p) for p in payload
-            ) + len(ts) * self.dim * 8
-            total = cached.get("bytes", 0) + added
-            if total > self.local_exact_budget_bytes:
+            payload = [
+                dict(zip(_PAYLOAD_COLS, (t[0], t[1], t[2], *t[5:])))
+                for t in ts
+            ]
+            nbytes = block.bytes + _rows_bytes(payload, self.dim)
+            if nbytes > self.local_exact_budget_bytes:
                 self._local_cache.pop(space, None)
                 self._local_over_budget[space] = self._epoch
                 continue
-            # float32 round-trip: DataFrame storage truncates the
-            # driver-side float64 embeddings to float32; a rebuild
-            # collects those truncated values, so the in-place block
-            # must hold the identical ones
-            new_emb = np.asarray(
-                [t[3] for t in ts], dtype=np.float32
-            ).astype(np.float64)
-            n_old, n_new = len(cached["ids"]), len(ts)
-            # amortized append: rows land in the PREALLOCATED tail of
-            # the backing buffers (readers' views cover [:n_old], a
-            # region these writes never touch), with geometric growth
-            # on overflow — a profiled single-row ingest previously
-            # re-concatenated the whole 182 MB ref-scale matrix
-            # (~450 ms/row); now a copy happens only on capacity
-            # growth, amortized O(rows appended)
-            be, bi, bm = (
-                cached.get("buf_emb", cached["emb"]),
-                cached.get("buf_ids", cached["ids"]),
-                cached.get("buf_mod", cached["modality"]),
+            self._local_cache[space] = block.extend(
+                self._epoch,
+                [t[0] for t in ts],
+                # DataFrame storage truncates the driver-side float64
+                # embeddings to float32; a rebuild collects those values
+                np.asarray([t[3] for t in ts], dtype=np.float32),
+                [t[1] for t in ts],
+                payload,
+                nbytes,
             )
-            if n_old + n_new > be.shape[0]:
-                cap = max(n_old + n_new, int(n_old * 1.5) + 8)
-                grown_e = np.empty((cap, be.shape[1]), dtype=be.dtype)
-                grown_e[:n_old] = cached["emb"]
-                grown_i = np.empty(cap, dtype=bi.dtype)
-                grown_i[:n_old] = cached["ids"]
-                grown_m = np.empty(cap, dtype=object)
-                grown_m[:n_old] = cached["modality"]
-                be, bi, bm = grown_e, grown_i, grown_m
-            be[n_old : n_old + n_new] = new_emb
-            bi[n_old : n_old + n_new] = [t[0] for t in ts]
-            bm[n_old : n_old + n_new] = [t[1] for t in ts]
-            self._local_cache[space] = {
-                "epoch": self._epoch,
-                "ids": bi[: n_old + n_new],
-                "emb": be[: n_old + n_new],
-                "modality": bm[: n_old + n_new],
-                "payload": cached["payload"] + payload,
-                "bytes": total,
-                "buf_emb": be,
-                "buf_ids": bi,
-                "buf_mod": bm,
-            }
-        # spaces this ingest did NOT touch keep their rows — restamp
-        # their valid caches so the unchanged corpus isn't re-collected
-        for space, cached in list(self._local_cache.items()):
-            if space not in by_space and cached["epoch"] == prev_epoch:
-                self._local_cache[space] = {
-                    **cached, "epoch": self._epoch
-                }
 
-    def _local_corpus(self, space: str) -> dict[str, Any] | None:
-        """The micro-path's corpus block: ids + a float64 embedding
-        matrix + payload row dicts for ``space``'s LIVE rows, resident
-        on the driver. Returns None when disabled
-        (``local_exact_budget_bytes=0``) or when the space's estimated
-        TOTAL resident footprint — vector mass (rows × dim × 8 B, the
-        float64 matrix actually held) PLUS the measured payload string bytes
-        (one column-pruned ``sum(octet_length(...))`` agg, run before
-        anything is collected) — exceeds the budget; above it the Spark
-        paths serve (the cache is the small-corpus latency fix, not a
-        general execution mode — at 100 TB every space is far past the
-        budget and nothing changes). Gating on vector mass alone would
-        let a fat-payload corpus (say 100k × 50 KB documents: ~205 MB
-        of vectors, ~5 GB of content strings) collect gigabytes to the
+    def _local_corpus(self, space: str) -> _ResidentBlock | None:
+        """The micro-path's resident block of ``space``'s LIVE rows —
+        the one place a block is built from the corpus. Returns None
+        when disabled (``local_exact_budget_bytes=0``) or when the
+        space's estimated TOTAL resident footprint — vector mass (rows
+        × dim × 8 B, the float64 matrix actually held) PLUS the
+        measured payload string bytes (one column-pruned
+        ``sum(octet_length(...))`` agg, run before anything is
+        collected) — exceeds the budget; above it the Spark paths serve
+        (the cache is the small-corpus latency fix, not a general
+        execution mode — at 100 TB every space is far past the budget
+        and nothing changes). Gating on vector mass alone would let a
+        fat-payload corpus (say 100k × 50 KB documents: ~205 MB of
+        vectors, ~5 GB of content strings) collect gigabytes to the
         driver — the reference holds full metadata in process
         (``vector_index.py:24``), a flaw this tier must not inherit.
         An over-budget verdict is remembered per epoch so repeated
         searches don't re-run the footprint agg.
 
-        Keyed on the corpus mutation epoch: every ingest/remove bumps
-        ``_epoch`` so the next micro-path call rebuilds from the
-        then-current corpus (one collect of the space's rows — the same
-        cost as a single Spark-path search, amortized over every call
-        until the next mutation). The epoch is snapshotted BEFORE the
-        collect: a concurrent ingest mid-build leaves the cache stamped
-        stale, never new-epoch-with-old-rows."""
-        import numpy as np
+        The block comes from ONE Arrow collect: the vectors arrive as
+        one flat float32 buffer that is widened into the float64
+        matrix (exact, the blocked scorer's cast), with no per-row
+        Python objects for the vector values. Payload values are
+        Arrow's Python conversions — the same values a Row collect
+        gives for the items schema's string/integer/boolean columns;
+        an extra timestamp, map or struct column would come back
+        tz-aware, as pairs, or as a dict.
 
-        if self.local_exact_budget_bytes <= 0 or self._corpus_absent():
+        Keyed on the corpus mutation epoch: every ingest/remove bumps
+        ``_epoch``; valid blocks are maintained in place by those
+        mutations, and any other change rebuilds on the next call (one
+        collect — the cost of a single Spark-path search, amortized
+        over every call until then). The epoch is snapshotted BEFORE
+        the collect: a concurrent ingest mid-build leaves the block
+        stamped stale, never new-epoch-with-old-rows."""
+        budget = self.local_exact_budget_bytes
+        if budget <= 0 or self._corpus_absent():
             return None
-        n = self._space_rows(space)
-        vec_bytes = n * self.dim * 8
-        if vec_bytes > self.local_exact_budget_bytes:
+        if self._space_rows(space) * self.dim * 8 > budget:
             return None
-        cached = self._local_cache.get(space)
-        if cached is not None and cached["epoch"] == self._epoch:
-            return cached
+        block = self._local_cache.get(space)
+        if block is not None and block.epoch == self._epoch:
+            return block
         if self._local_over_budget.get(space) == self._epoch:
             return None
         epoch = self._epoch
@@ -2313,14 +2272,12 @@ class MultiModalSearchEngine:
         ]
         # payload footprint BEFORE the collect (see docstring): string
         # columns measured exactly, everything else a per-row constant
-        str_cols = [
-            c for c, t in corpus.dtypes if c in pay_cols and t == "string"
-        ]
         size_expr = F.lit(0).cast("long")
-        for c in str_cols:
-            size_expr = size_expr + F.coalesce(
-                F.octet_length(F.col(c)).cast("long"), F.lit(0)
-            )
+        for c, t in corpus.dtypes:
+            if c in pay_cols and t == "string":
+                size_expr = size_expr + F.coalesce(
+                    F.octet_length(F.col(c)).cast("long"), F.lit(0)
+                )
         stats = corpus.agg(
             F.count("*").alias("n"), F.sum(size_expr).alias("s")
         ).first()
@@ -2329,371 +2286,290 @@ class MultiModalSearchEngine:
         # the cheap pre-filter above), but the admitted footprint must
         # match what the collect actually holds — and stay equal to the
         # incrementally maintained estimate (parity-tested). 8 B/elem:
-        # the RESIDENT matrix is float64 (round 12 — the 4 B float32
-        # on-disk estimate under-counted the admitted block 2×; now the
-        # vector term equals the cached block's actual emb.nbytes)
+        # the RESIDENT matrix is float64, so the vector term equals
+        # the block's emb.nbytes
         total_bytes = (
-            stats["n"] * self.dim * 8
+            stats["n"] * (self.dim * 8 + _ROW_OVERHEAD_BYTES)
             + (stats["s"] or 0)
-            + stats["n"] * self._LOCAL_ROW_OVERHEAD_BYTES
         )
-        if total_bytes > self.local_exact_budget_bytes:
+        if total_bytes > budget:
             self._local_over_budget[space] = epoch
             return None
-        rows = corpus.collect()
-        # float32 parquet values -> exact float64 (same cast as the
-        # blocked scorer's astype(np.float64) — values are identical)
-        emb = (
-            np.array([r["embedding"] for r in rows], dtype=np.float64)
-            if rows
-            else np.zeros((0, self.dim), dtype=np.float64)
+        t = corpus.select("embedding", *pay_cols).toArrow()
+        n = t.num_rows
+        block = _ResidentBlock.build(
+            epoch,
+            t.column("id").to_numpy(),
+            (
+                t.column("embedding").combine_chunks().flatten()
+                .to_numpy(zero_copy_only=False).reshape(n, -1)
+                if n
+                else np.zeros((0, self.dim))
+            ),
+            t.column("modality").to_numpy(),
+            t.select(pay_cols).to_pylist(),
+            total_bytes,
         )
-        # NOTE: no separate list-of-lists copy of the vectors is kept —
-        # emb.tolist() slices reproduce the collected float values
-        # bit-for-bit (float32 parquet values are exact in float64), so
-        # diversity reranking reads rows out of the matrix on demand
-        cached = {
-            "epoch": epoch,
-            "ids": np.array([r["id"] for r in rows], dtype=np.int64),
-            "emb": emb,
-            "modality": np.array(
-                [r["modality"] for r in rows], dtype=object
-            ),
-            "payload": [{c: r[c] for c in pay_cols} for r in rows],
-            # estimated resident footprint this block was admitted at —
-            # the compare micro-path sums these across spaces, and the
-            # incremental-append path grows it in place
-            "bytes": total_bytes,
-        }
-        self._local_cache[space] = cached
-        return cached
+        self._local_cache[space] = block
+        return block
 
-    def _local_route_log(
-        self, cache: dict, space: str, recall_floor: float
-    ) -> None:
-        n = len(cache["ids"])
-        mb = cache.get("bytes", n * self.dim * 8) / (1024 * 1024)
-        self.last_route = {
-            "route": "exact-local",
-            "reason": (
-                f"{space!r} corpus {n} rows × dim {self.dim}: "
-                f"~{mb:.1f} MB estimated resident footprint (vectors "
-                "+ payload strings) within local_exact_budget — driver-"
-                "resident exact scan (same BLAS kernel + tie-break as "
-                "the blocked scorer, no per-job scheduling floor; "
-                "exact, so any recall floor is honored)"
-            ),
-            "recall_floor": recall_floor,
-        }
+    def _admit(self) -> threading.BoundedSemaphore:
+        """The micro-path's admission gate, entered as ``with
+        self._admit():`` around all resident-block scoring: at most
+        ``local_max_concurrency`` calls score at once, and excess
+        callers park on the semaphore (releasing the GIL) instead of
+        joining the runnable-thread convoy — see ``_local_gate``."""
+        return self._local_gate
 
-    def _search_local(
+    def _local_topk(
         self,
-        space: str,
-        qvec: list[float],
-        k: int,
-        fetch_n: int,
-        filter_content_type: str | None,
-        strategy: str,
-        recall_floor: float,
-    ) -> list[dict[str, Any]] | None:
-        """Serve one exact top-k from the driver-resident corpus block
-        — the reference's most common user path is ONE interactive
-        query (``search_images.py:42-59``), where Spark local mode's
-        per-job scheduling floor (~0.5 s) is 40× the actual scoring
-        work at 44k × 512-d. Same float64 BLAS scoring and
-        ``(sim desc, id asc)`` tie-break as
-        :func:`~multimodal_vector_db_spark.operators.knn.knn_search_blocked`
-        (``topk_rows_1d`` is literally the blocked scorer's selection
-        kernel), so results are identical to the Spark exact path —
-        parity-tested. Returns None when the space is over budget (the
-        caller falls through to the Spark planner).
-
-        Concurrency: admission-gated (``local_max_concurrency``) — see
-        ``_local_gate``; the blocked wait releases the GIL, which is
-        the whole point."""
-        import numpy as np
-
-        from multimodal_vector_db_spark.operators.knn import topk_rows_1d
-
-        cache = self._local_corpus(space)
-        if cache is None:
-            return None
-        if self._local_gate is not None:
-            self._local_gate.acquire()
-        try:
-            return self._search_local_admitted(
-                cache, space, qvec, k, fetch_n, filter_content_type,
-                strategy, recall_floor, np, topk_rows_1d,
-            )
-        finally:
-            if self._local_gate is not None:
-                self._local_gate.release()
-
-    def _search_local_admitted(
-        self, cache, space, qvec, k, fetch_n, filter_content_type,
-        strategy, recall_floor, np, topk_rows_1d,
-    ) -> list[dict[str, Any]]:
-        ids, emb = cache["ids"], cache["emb"]
-        sel = None
-        if filter_content_type is not None:
-            mask = cache["modality"] == filter_content_type
-            sel = np.nonzero(mask)[0]
-            ids, emb = ids[sel], emb[sel]
-        diversity = strategy not in (None, "distance")
-        rows: list[dict[str, Any]] = []
-        if len(ids):
-            from multimodal_vector_db_spark.functions.blasctl import (
-                gemm_section,
-            )
-
-            q = np.asarray(qvec, dtype=np.float64)
-            with gemm_section():
-                s = emb @ q
-            top = topk_rows_1d(s, ids, min(fetch_n, len(ids)))
-            for t in top:
-                src = int(sel[t]) if sel is not None else int(t)
-                d = dict(cache["payload"][src])
-                d["sim"] = float(s[t])
-                if diversity:
-                    d["embedding"] = cache["emb"][src].tolist()
-                rows.append(d)
-        self._local_route_log(cache, space, recall_floor)
-        return rerank(rows, strategy=strategy, top_k=k)
-
-    def _search_batch_local(
-        self,
-        space: str,
+        block: _ResidentBlock,
         qvecs: list[list[float]],
         k: int,
-        filter_content_type: str | None,
-        recall_floor: float,
-    ) -> dict[int, list[dict[str, Any]]] | None:
-        """Batch twin of :meth:`_search_local` — one driver-side
-        (n × nq) BLAS matmul + the blocked scorer's exact per-column
-        selection (``topk_rows_2d``), identical ranking to
-        ``knn_join_blocked`` + its window. Admission-gated like
-        :meth:`_search_local`."""
-        import numpy as np
-
-        from multimodal_vector_db_spark.operators.knn import topk_rows_2d
-
-        cache = self._local_corpus(space)
-        if cache is None:
-            return None
-        if self._local_gate is not None:
-            self._local_gate.acquire()
-        try:
-            return self._search_batch_local_admitted(
-                cache, space, qvecs, k, filter_content_type,
-                recall_floor, np, topk_rows_2d,
-            )
-        finally:
-            if self._local_gate is not None:
-                self._local_gate.release()
-
-    def _search_batch_local_admitted(
-        self, cache, space, qvecs, k, filter_content_type,
-        recall_floor, np, topk_rows_2d,
-    ) -> dict[int, list[dict[str, Any]]]:
-        ids, emb = cache["ids"], cache["emb"]
-        sel = None
-        if filter_content_type is not None:
-            mask = cache["modality"] == filter_content_type
-            sel = np.nonzero(mask)[0]
-            ids, emb = ids[sel], emb[sel]
-        out: dict[int, list[dict[str, Any]]] = {
-            i: [] for i in range(len(qvecs))
-        }
-        if len(ids):
-            from multimodal_vector_db_spark.functions.blasctl import (
-                gemm_section,
-            )
-
-            Q = np.array(qvecs, dtype=np.float64)  # (nq, d)
-            with gemm_section():
-                S = emb @ Q.T  # (n, nq)
-            kk = min(k, len(ids))
-            top = topk_rows_2d(S, ids, kk)  # (kk, nq)
-            for j in range(len(qvecs)):
-                for t in top[:, j]:
-                    src = int(sel[t]) if sel is not None else int(t)
-                    d = dict(cache["payload"][src])
-                    d["sim"] = float(S[t, j])
-                    out[j].append(d)
-        self._local_route_log(cache, space, recall_floor)
-        return out
-
-    def _compare_local_rows(
-        self,
-        q_by_space_list: list[dict[str, list[float]]],
-        k_per_modality: int,
-        default_space: str = "clip",
-    ) -> list[tuple] | None:
-        """Driver-resident dual-space scoring for
-        :meth:`compare_modalities` / :meth:`compare_modalities_batch` —
-        the §3.3 signature query is a SINGLE interactive call in the
-        reference (``search_cross_modal.py:107-173``), so it gets the
-        same micro-path as :meth:`search`. Every space's live rows must
-        collectively fit the byte budget (all spaces are scored); each
-        row scores against ITS space's query vector (absent spaces fall
-        back to ``default_space`` — the HOF form's ``otherwise``
-        branch), then exact top-k per (query, modality) with the
-        blocked kernel's tie-break. Returns
-        ``[(query_idx, modality, space, id, display_name, sim, rank)]``
-        sorted by (query, modality, rank), or None when over budget /
-        disabled."""
-        import numpy as np
-
-        from multimodal_vector_db_spark.operators.knn import topk_rows_1d
-
-        if self.local_exact_budget_bytes <= 0 or self._corpus_absent():
-            return None
-        self._space_rows(default_space)  # materialize the per-space map
-        spaces = sorted(
-            s for s, n in self._n_rows_by_space.items() if n > 0
-        )
-        total_cells = sum(
-            self._n_rows_by_space[s] for s in spaces
-        ) * self.dim
-        if total_cells * 8 > self.local_exact_budget_bytes:
-            return None
-        caches = {}
-        for s in spaces:
-            c = self._local_corpus(s)
-            if c is None:
-                return None
-            if len(c["ids"]) and c["emb"].shape[1] != self.dim:
-                # a space at a different width (e.g. audio_sig WHT
-                # signatures) cannot score against the engine-dim query
-                # vectors — defer to the Spark paths' handling
-                return None
-            caches[s] = c
-        if (
-            sum(c.get("bytes", 0) for c in caches.values())
-            > self.local_exact_budget_bytes
-        ):
-            # every space fits individually but not together — the
-            # compare path holds ALL of them resident at once
-            return None
-        # admission gate (see _local_gate): same contract as
-        # _search_local — excess concurrent callers park on the
-        # semaphore instead of convoying on the GIL
-        if self._local_gate is not None:
-            self._local_gate.acquire()
-        try:
-            return self._compare_local_rows_admitted(
-                caches, spaces, q_by_space_list, k_per_modality,
-                default_space,
-            )
-        finally:
-            if self._local_gate is not None:
-                self._local_gate.release()
-
-    def _compare_local_rows_admitted(
-        self,
-        caches: dict[str, dict],
-        spaces: list[str],
-        q_by_space_list: list[dict[str, list[float]]],
-        k_per_modality: int,
-        default_space: str,
-    ) -> list[tuple]:
-        import numpy as np
-
-        from multimodal_vector_db_spark.operators.knn import topk_rows_1d
-        # per-epoch derived structures (concatenated ids, per-modality
-        # row selections, row→(space, local index) maps): building
-        # these costs ~n Python-object ops, so they are computed ONCE
-        # per corpus epoch, not per call. Validity is keyed on the
-        # EPOCHS OF THE PER-SPACE CACHES it was built from, not on
-        # self._epoch: a per-space cache snapshots its epoch BEFORE its
-        # collect (an ingest landing mid-collect leaves it stamped
-        # stale), so a cc stamped with the then-current global epoch
-        # could match self._epoch while the per-space caches it indexes
-        # into have since been rebuilt — misaligned group_sel/ids_cat
-        # over fresh matrices. Cache epochs strictly increase across
-        # rebuilds, so equality here proves cc was derived from exactly
-        # these cache objects.
-        cache_epochs = {s: caches[s]["epoch"] for s in spaces}
-        cc = self._compare_cache
-        if (
-            cc is None
-            or cc["spaces"] != spaces
-            or cc.get("cache_epochs") != cache_epochs
-        ):
-            ids_all, mods, sp_idx, row_idx = [], [], [], []
-            for si, s in enumerate(spaces):
-                c = caches[s]
-                n_s = len(c["ids"])
-                if not n_s:
-                    continue
-                ids_all.append(c["ids"])
-                mods.append(c["modality"])
-                sp_idx.append(np.full(n_s, si, dtype=np.int32))
-                row_idx.append(np.arange(n_s, dtype=np.int64))
-            if not ids_all:
-                return []
-            mods_cat = np.concatenate(mods)
-            # None-safe ordering: a null modality is its own group (the
-            # Spark window form partitions it too); it sorts last
-            groups = sorted(
-                set(mods_cat.tolist()), key=lambda g: (g is None, g)
-            )
-            cc = {
-                "cache_epochs": cache_epochs,
-                "spaces": spaces,
-                "ids_cat": np.concatenate(ids_all),
-                "sp_idx": np.concatenate(sp_idx),
-                "row_idx": np.concatenate(row_idx),
-                "groups": groups,
-                "group_sel": {
-                    g: np.nonzero(mods_cat == g)[0] for g in groups
-                },
-            }
-            self._compare_cache = cc
-        nq = len(q_by_space_list)
-        # one GEMM per space scores EVERY query at once (the batch
-        # twin's whole point), then exact per-(query, modality) top-k
+        modality: str | None = None,
+        embedding: bool = False,
+    ) -> list[list[dict[str, Any]]]:
+        """The micro-path's one scoring kernel, for single (a batch of
+        one) and batch searches: ``S = emb @ Q.T`` over the whole block,
+        the content-type filter restricts the ROWS of ``S`` (scores are
+        gathered, never matrix rows), then the blocked scorers' exact
+        ``(sim desc, id asc)`` selection per query — ``topk_rows_1d`` /
+        ``topk_rows_2d`` are literally those scorers' kernels, so the
+        results match the Spark exact path (parity-tested). A 1-row
+        ``Q`` gives the GEMV result bit-for-bit. Returns one ranked
+        list of payload row dicts (plus ``sim``, plus ``embedding``
+        when asked) per query. The reference's most common user path
+        is ONE interactive query (``search_images.py:42-59``), where
+        Spark local mode's per-job scheduling floor (~0.5 s) is 40×
+        the actual scoring work at 44k × 512-d."""
         from multimodal_vector_db_spark.functions.blasctl import (
             gemm_section,
         )
 
-        with gemm_section():
-            S_all = [
-                caches[s]["emb"]
-                @ np.array(
-                    [q.get(s, q[default_space]) for q in q_by_space_list],
-                    dtype=np.float64,
-                ).T
-                for s in spaces
-                if len(caches[s]["ids"])
-            ]
-        S_cat = np.concatenate(S_all, axis=0)  # (n, nq)
-        ids_cat = cc["ids_cat"]
-        per_q: list[list[tuple]] = [[] for _ in range(nq)]
-        for g in cc["groups"]:
-            sel = cc["group_sel"][g]
-            Sg = S_cat[sel]  # (n_g, nq) — one gather per group
-            ids_g = ids_cat[sel]
-            kk = min(k_per_modality, len(sel))
-            for qi in range(nq):
-                top = topk_rows_1d(Sg[:, qi], ids_g, kk)
-                for rank, t in enumerate(top, start=1):
-                    src = int(sel[t])
-                    pay = caches[spaces[cc["sp_idx"][src]]]["payload"][
-                        int(cc["row_idx"][src])
-                    ]
-                    per_q[qi].append(
-                        (
-                            qi,
-                            g,
-                            pay["space"],
-                            int(ids_g[t]),
-                            pay["display_name"],
-                            float(Sg[t, qi]),
-                            rank,
+        out: list[list[dict[str, Any]]] = [[] for _ in qvecs]
+        with self._admit():
+            sel = (
+                None
+                if modality is None
+                else np.nonzero(block.modality == modality)[0]
+            )
+            ids = block.ids if sel is None else block.ids[sel]
+            if not len(ids):
+                return out
+            with gemm_section():
+                S = block.emb @ np.asarray(qvecs, dtype=np.float64).T
+            if sel is not None:
+                S = S[sel]
+            kk = min(k, len(ids))
+            top = (
+                knn.topk_rows_1d(S[:, 0], ids, kk)[:, None]
+                if len(qvecs) == 1
+                else knn.topk_rows_2d(S, ids, kk)
+            )
+            for j, rows in enumerate(out):
+                for t in top[:, j]:
+                    src = t if sel is None else sel[t]
+                    r = dict(block.payload[src])
+                    r["sim"] = float(S[t, j])
+                    if embedding:
+                        r["embedding"] = block.emb[src].tolist()
+                    rows.append(r)
+        return out
+
+    def _compare_local(
+        self, qs: list[dict[str, list[float]]], k_per_modality: int
+    ) -> dict[int, list[dict[str, Any]]] | None:
+        """Driver-resident dual-space scoring for the three compare
+        entry points — the §3.3 signature query is a SINGLE interactive
+        call in the reference (``search_cross_modal.py:107-173``), so it
+        gets the same micro-path as :meth:`search`. Every space's live
+        rows must collectively fit the byte budget (all spaces are
+        scored); each row scores against ITS space's query vector
+        (absent spaces fall back to clip — the HOF form's ``otherwise``
+        branch), then exact top-k per (query, modality) with the
+        blocked kernel's tie-break. Returns ``{query_index: [row dicts
+        in _COMPARE_SCHEMA order, ranked per modality]}`` and logs the
+        route, or None when over budget / disabled."""
+        from multimodal_vector_db_spark.functions.blasctl import (
+            gemm_section,
+        )
+
+        budget = self.local_exact_budget_bytes
+        if budget <= 0 or self._corpus_absent():
+            return None
+        self._space_rows("clip")  # materialize the per-space map
+        spaces = sorted(
+            s for s, n in self._n_rows_by_space.items() if n > 0
+        )
+        if sum(self._n_rows_by_space[s] for s in spaces) * self.dim * 8 > budget:
+            return None
+        blocks = {}
+        for s in spaces:
+            b = self._local_corpus(s)
+            # a space at a different width (e.g. audio_sig WHT
+            # signatures) cannot score against the engine-dim query
+            # vectors — defer to the Spark paths' handling
+            if b is None or (len(b.ids) and b.emb.shape[1] != self.dim):
+                return None
+            blocks[s] = b
+        if sum(b.bytes for b in blocks.values()) > budget:
+            # every space fits individually but not together — the
+            # compare path holds ALL of them resident at once
+            return None
+        self.last_route = {
+            "route": "exact-local",
+            "reason": (
+                "all spaces within local_exact_budget — driver-resident "
+                "dual-space scoring"
+            ),
+        }
+        out: dict[int, list[dict[str, Any]]] = {i: [] for i in range(len(qs))}
+        live = [s for s in spaces if len(blocks[s].ids)]
+        if not live:
+            return out
+        with self._admit():
+            # per-epoch derived structures (concatenated ids,
+            # per-modality row selections, row→(space, local index)
+            # maps): building these costs ~n Python-object ops, so they
+            # are computed ONCE per corpus epoch, not per call. Validity
+            # is keyed on the EPOCHS OF THE BLOCKS it was built from, not
+            # on self._epoch: a block snapshots its epoch BEFORE its
+            # collect (an ingest landing mid-collect leaves it stamped
+            # stale), so a structure stamped with the then-current
+            # global epoch could match self._epoch while the blocks it
+            # indexes into have since been rebuilt — misaligned
+            # group_sel/ids_cat over fresh matrices. Block epochs
+            # strictly increase across rebuilds, so equality here proves
+            # cc was derived from exactly these blocks.
+            epochs = {s: blocks[s].epoch for s in spaces}
+            cc = self._compare_cache
+            if (
+                cc is None
+                or cc["spaces"] != spaces
+                or cc["cache_epochs"] != epochs
+            ):
+                mods = np.concatenate([blocks[s].modality for s in live])
+                # None-safe ordering: a null modality is its own group
+                # (the Spark window form partitions it too); it sorts last
+                groups = sorted(
+                    set(mods.tolist()), key=lambda g: (g is None, g)
+                )
+                cc = self._compare_cache = {
+                    "cache_epochs": epochs,
+                    "spaces": spaces,
+                    "ids_cat": np.concatenate([blocks[s].ids for s in live]),
+                    "sp_idx": np.concatenate(
+                        [np.full(len(blocks[s].ids), i) for i, s in enumerate(live)]
+                    ),
+                    "row_idx": np.concatenate(
+                        [np.arange(len(blocks[s].ids)) for s in live]
+                    ),
+                    "groups": groups,
+                    "group_sel": {
+                        g: np.nonzero(mods == g)[0] for g in groups
+                    },
+                }
+            # one GEMM per space scores EVERY query at once, then exact
+            # per-(query, modality) top-k
+            with gemm_section():
+                S = np.concatenate(
+                    [
+                        blocks[s].emb
+                        @ np.array(
+                            [q.get(s, q["clip"]) for q in qs],
+                            dtype=np.float64,
+                        ).T
+                        for s in live
+                    ],
+                    axis=0,
+                )  # (n, nq)
+            for g in cc["groups"]:
+                sel = cc["group_sel"][g]
+                Sg, ids_g = S[sel], cc["ids_cat"][sel]
+                kk = min(k_per_modality, len(sel))
+                for qi, rows in out.items():
+                    top = knn.topk_rows_1d(Sg[:, qi], ids_g, kk)
+                    for rank, t in enumerate(top, start=1):
+                        src = sel[t]
+                        pay = blocks[live[cc["sp_idx"][src]]].payload[
+                            cc["row_idx"][src]
+                        ]
+                        rows.append(
+                            {
+                                "modality": g,
+                                "space": pay["space"],
+                                "id": int(ids_g[t]),
+                                "display_name": pay["display_name"],
+                                "sim": float(Sg[t, qi]),
+                                "rank": rank,
+                            }
                         )
-                    )
-        return [row for rows in per_q for row in rows]
+        return out
+
+    def _space_corpus(self, space: str, modality: str | None) -> DataFrame:
+        """Live rows of ``space``, restricted to a content type if given."""
+        corpus = active(self.items).where(F.col("space") == space)
+        if modality is not None:
+            corpus = corpus.where(F.col("modality") == modality)
+        return corpus
+
+    def _ivf_pairs(
+        self,
+        corpus: DataFrame,
+        space: str,
+        qvecs: list[list[float]],
+        k: int,
+        nprobe: int,
+    ) -> list[tuple[int, int, float]]:
+        """IVF top-``k`` per query as ``(query_index, id, sim)`` ranked by
+        (query, sim desc, id asc). The slim ``(id, cluster_id)``
+        assignment is joined back to ``corpus`` so tombstones and
+        filters applied to it hold; MLlib-fitted centroids are probed
+        by the SAME l2 rule."""
+        from multimodal_vector_db_spark.operators.ann import (
+            ivf_search_blocked,
+        )
+
+        info = self._ann[space]
+        rows = ivf_search_blocked(
+            corpus.select("id", "embedding").join(info["assign"], "id"),
+            [(i, [float(x) for x in v]) for i, v in enumerate(qvecs)],
+            info["centroids"],
+            k=k,
+            nprobe=nprobe,
+            probe_metric="l2",
+        ).collect()
+        return sorted(
+            ((r["query_id"], r["id"], r["sim"]) for r in rows),
+            key=lambda p: (p[0], -p[2], p[1]),
+        )
+
+    def _with_payload(
+        self,
+        corpus: DataFrame,
+        pairs: list[tuple[int, int, float]],
+        n_queries: int,
+        embedding: bool = False,
+    ) -> dict[int, list[dict[str, Any]]]:
+        """Attach payload columns (plus the vector when ``embedding``) to
+        ranked ``(query_index, id, sim)`` winners with ONE point-lookup
+        of the union of winner ids (:meth:`_fetch_payload`) — the
+        exact-blocked and IVF scorers return ids and sims only."""
+        pay = [
+            c for c in corpus.columns if c not in ("embedding", "dim", "id")
+        ]
+        if embedding:
+            pay.append("embedding")
+        fetched = self._fetch_payload(
+            corpus, sorted({i for _, i, _ in pairs}), pay
+        )
+        out: dict[int, list[dict[str, Any]]] = {
+            q: [] for q in range(n_queries)
+        }
+        for q, i, sim in pairs:
+            if i in fetched:
+                out[q].append({**fetched[i], "sim": sim})
+        return out
 
     def _fetch_payload(
         self, corpus: DataFrame, ids: list[int], pay: list[str]
@@ -2821,59 +2697,24 @@ class MultiModalSearchEngine:
         (no Arrow round-trip). ``scorer="hof"``/``"blocked"`` force a
         path — both return the same winner sets (scores differ only in
         fp accumulation order; parity-tested)."""
-        q_clip = self._embed(query, "clip")
-        q_clap = self._embed(query, "clap")
-        # driver-resident micro-path (round 10): the §3.3 query is a
-        # single interactive call — same budget/eligibility contract as
-        # search(); an explicit scorer keeps the Spark parity paths
-        if scorer == "auto":
-            local = self._compare_local_rows(
-                [{"clip": q_clip, "clap": q_clap}], k_per_modality
-            )
-            if local is not None:
-                self.last_route = {
-                    "route": "exact-local",
-                    "reason": (
-                        "all spaces within local_exact_budget — driver-"
-                        "resident dual-space scoring"
-                    ),
-                }
-                return self.spark.createDataFrame(
-                    [(m, s, i, d, sim, r) for (_q, m, s, i, d, sim, r) in local],
-                    self._COMPARE_SCHEMA,
-                )
-        use_blocked = scorer == "blocked" or (
-            scorer == "auto"
-            and self._corpus_rows() * self.dim >= self._single_threshold()
+        q = self._dual(query)
+        rows = (
+            self._compare_local([q], k_per_modality)
+            if scorer == "auto"
+            else None
         )
-        if use_blocked:
-            from multimodal_vector_db_spark.operators.knn import (
-                dual_space_topk_blocked,
+        if rows is None and (
+            scorer == "blocked"
+            or (
+                scorer == "auto"
+                and self._corpus_rows() * self.dim >= self._single_threshold()
             )
-
-            corpus = active(self.items)
-            winners = dual_space_topk_blocked(
-                corpus,
-                [(0, {"clip": q_clip, "clap": q_clap})],
-                k=k_per_modality,
-            ).collect()
-            ids = sorted({r["id"] for r in winners})
-            fetched = self._fetch_payload(
-                corpus, ids, ["space", "display_name"]
+        ):
+            rows = self._compare_blocked([q], k_per_modality)
+        if rows is not None:
+            return self.spark.createDataFrame(
+                [tuple(r.values()) for r in rows[0]], self._COMPARE_SCHEMA
             )
-            rows = [
-                (
-                    r["group"],
-                    fetched[r["id"]]["space"],
-                    r["id"],
-                    fetched[r["id"]]["display_name"],
-                    r["sim"],
-                    r["rank"],
-                )
-                for r in winners
-                if r["id"] in fetched
-            ]
-            return self.spark.createDataFrame(rows, self._COMPARE_SCHEMA)
         from pyspark.sql import Window
 
         lit = lambda v: F.array(*[F.lit(float(x)) for x in v])  # noqa: E731
@@ -2882,8 +2723,8 @@ class MultiModalSearchEngine:
         scored = active(self.items).withColumn(
             "sim",
             F.when(
-                F.col("space") == "clap", dot(F.col("embedding"), lit(q_clap))
-            ).otherwise(dot(F.col("embedding"), lit(q_clip))),
+                F.col("space") == "clap", dot(F.col("embedding"), lit(q["clap"]))
+            ).otherwise(dot(F.col("embedding"), lit(q["clip"]))),
         )
         w = Window.partitionBy("modality").orderBy(
             F.col("sim").desc(), F.col("id").asc()
@@ -2909,35 +2750,9 @@ class MultiModalSearchEngine:
         and sims as the DataFrame form (parity-tested); keep
         :meth:`compare_modalities` for relational composition. Over
         budget this falls back to collecting the Spark plan."""
-        local = self._compare_local_rows(
-            [
-                {
-                    "clip": self._embed(query, "clip"),
-                    "clap": self._embed(query, "clap"),
-                }
-            ],
-            k_per_modality,
-        )
+        local = self._compare_local([self._dual(query)], k_per_modality)
         if local is not None:
-            self.last_route = {
-                "route": "exact-local",
-                "reason": (
-                    "all spaces within local_exact_budget — driver-"
-                    "resident dual-space scoring (rows form, no "
-                    "DataFrame materialization)"
-                ),
-            }
-            return [
-                {
-                    "modality": m,
-                    "space": s,
-                    "id": i,
-                    "display_name": d,
-                    "sim": sim,
-                    "rank": r,
-                }
-                for (_q, m, s, i, d, sim, r) in local
-            ]
+            return local[0]
         out = [
             r.asDict()
             for r in self.compare_modalities(query, k_per_modality)
@@ -2969,59 +2784,46 @@ class MultiModalSearchEngine:
         scorer: with B queries the matmul batches to (n × B) per space
         and the HOF form would plan B scoring columns. Returns
         ``{query_index: [row dicts ranked per modality]}``."""
-        from multimodal_vector_db_spark.operators.knn import (
-            dual_space_topk_blocked,
+        qs = [self._dual(q) for q in queries]
+        # driver-resident micro-path first (one GEMM per space scores
+        # every query) — same contract as compare_modalities
+        local = self._compare_local(qs, k_per_modality)
+        return (
+            local
+            if local is not None
+            else self._compare_blocked(qs, k_per_modality)
         )
 
-        qpairs = [
-            (
-                i,
-                {
-                    "clip": self._embed(q, "clip"),
-                    "clap": self._embed(q, "clap"),
-                },
-            )
-            for i, q in enumerate(queries)
-        ]
-        # driver-resident micro-path (one GEMM per space scores every
-        # query) — same contract as compare_modalities
-        local = self._compare_local_rows(
-            [v for _, v in qpairs], k_per_modality
-        )
-        if local is not None:
-            self.last_route = {
-                "route": "exact-local",
-                "reason": (
-                    "all spaces within local_exact_budget — driver-"
-                    "resident dual-space batch scoring"
-                ),
-            }
-            out_l: dict[int, list[dict[str, Any]]] = {
-                i: [] for i in range(len(queries))
-            }
-            for qi, m, s, i_, d, sim, r in local:
-                out_l[qi].append(
-                    {
-                        "modality": m,
-                        "space": s,
-                        "id": i_,
-                        "display_name": d,
-                        "sim": sim,
-                        "rank": r,
-                    }
-                )
-            return out_l
-        corpus = active(self.items)
-        winners = dual_space_topk_blocked(
-            corpus, qpairs, k=k_per_modality
-        ).collect()
-        ids = sorted({r["id"] for r in winners})
-        fetched = self._fetch_payload(corpus, ids, ["space", "display_name"])
-        out: dict[int, list[dict[str, Any]]] = {
-            i: [] for i in range(len(queries))
+    def _dual(self, query: str) -> dict[str, list[float]]:
+        """A text query embedded into both learned spaces."""
+        return {
+            "clip": self._embed(query, "clip"),
+            "clap": self._embed(query, "clap"),
         }
+
+    def _compare_blocked(
+        self, qs: list[dict[str, list[float]]], k_per_modality: int
+    ) -> dict[int, list[dict[str, Any]]]:
+        """The Spark blocked form of dual-space scoring: one
+        :func:`~multimodal_vector_db_spark.operators.knn.dual_space_topk_blocked`
+        job scores every query (per-partition matmul per space, local
+        top-k per modality, ranking window over only ``partitions ×
+        modalities × k`` candidates), then payload is re-fetched by a
+        pushed ``id IN`` point-lookup. Same return shape as
+        :meth:`_compare_local`."""
+        corpus = active(self.items)
+        winners = knn.dual_space_topk_blocked(
+            corpus, list(enumerate(qs)), k=k_per_modality
+        ).collect()
+        fetched = self._fetch_payload(
+            corpus, sorted({r["id"] for r in winners}), ["space", "display_name"]
+        )
+        out: dict[int, list[dict[str, Any]]] = {i: [] for i in range(len(qs))}
         for r in sorted(
-            winners, key=lambda r: (r["query_id"], r["group"], r["rank"])
+            winners,
+            key=lambda r: (
+                r["query_id"], r["group"] is None, r["group"], r["rank"]
+            ),
         ):
             if r["id"] in fetched:
                 out[r["query_id"]].append(
@@ -3157,8 +2959,6 @@ class MultiModalSearchEngine:
         All search paths (HOF, blocked dispatch, batch) work unchanged;
         only the per-row byte and multiply cost shrink by
         ``dim/full_dim``."""
-        import numpy as np
-
         storage = CorpusStorage(base_path)
         df, manifest = storage.load_index(spark, f"{name}_d{dim}")
         full_dim = int(manifest["full_dim"])

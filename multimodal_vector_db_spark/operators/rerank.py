@@ -12,14 +12,18 @@ Reference semantics (``reranker.py``):
 
 MMR is inherently a small-N sequential greedy loop, so it runs
 driver-side over the collected top-N (N ≲ a few hundred) — the
-candidate *generation* is the distributed part. Deterministic given its
-input: ties broken by candidate order (stable argmax), matching the
-reference's ``np.argmax`` first-hit semantics.
+candidate *generation* is the distributed part. The N×N candidate
+cosine matrix is computed once with numpy; each greedy step is then one
+vectorized argmax and one running-max update. Deterministic given its
+input: ties broken by candidate order (first max, the reference's
+``np.argmax`` semantics).
 """
 
 from __future__ import annotations
 
 import math
+
+import numpy as np
 
 Row = dict
 
@@ -27,31 +31,14 @@ Row = dict
 def _cosine(a: list[float], b: list[float]) -> float:
     """reranker.py:135-138 — epsilon-guarded cosine.
 
-    Retained as the REFERENCE SPECIFICATION for :func:`_norm` /
-    :func:`_cosine_n` (the norm-cached split the greedy loop actually
-    calls): ``_cosine_n(a, _norm(a), b, _norm(b))`` must equal this
-    bit-for-bit — pinned by tests/test_rerank.py."""
+    The REFERENCE SPECIFICATION of the similarity :func:`mmr_rerank`
+    computes in bulk: on seeded random candidate sets the greedy picks
+    the same ids as a plain greedy over this function
+    (tests/test_rerank.py)."""
     dot = sum(x * y for x, y in zip(a, b))
     na = math.sqrt(sum(x * x for x in a))
     nb = math.sqrt(sum(x * x for x in b))
     return dot / (na * nb + 1e-8)
-
-
-def _norm(a: list[float]) -> float:
-    """The exact norm term of :func:`_cosine` — same fold, same bits."""
-    return math.sqrt(sum(x * x for x in a))
-
-
-def _cosine_n(a: list[float], na: float, b: list[float], nb: float) -> float:
-    """:func:`_cosine` with the two norms precomputed by :func:`_norm`.
-
-    MMR calls cosine O(k·n) times but every candidate's norm is
-    CONSTANT — recomputing both norms inside each call was ~2/3 of the
-    diversity-rerank wall (profiled 26 ms/call at 345×512-d, round 12,
-    guide §1.2). Identical arithmetic: the cached na/nb come from the
-    same sequential fold _cosine uses, so every cosine (and therefore
-    every greedy selection and tie-break) is bit-identical."""
-    return sum(x * y for x, y in zip(a, b)) / (na * nb + 1e-8)
 
 
 def mmr_rerank(
@@ -67,49 +54,26 @@ def mmr_rerank(
     if any(embedding_key not in c or c[embedding_key] is None for c in candidates):
         return candidates[:top_k]  # reranker.py:70-77
 
-    remaining = list(candidates)
-    # seed: best by relevance score (stable first-max)
-    best_i = max(range(len(remaining)), key=lambda i: (remaining[i][score_key], -i))
-    selected = [remaining.pop(best_i)]
-    # running max-similarity per remaining candidate (round 10): the
-    # greedy's max over the selected set only grows by the ONE item
-    # appended each round, so each candidate needs one new cosine per
-    # round instead of recomputing the whole set — O(k·n) cosines,
-    # not O(k²·n). max() is order-independent, so every value (and
-    # therefore every selection and tie-break) is bit-identical to the
-    # recompute-everything form the oracle replays.
-    if not remaining or len(selected) >= top_k:
-        return selected  # top_k=1: no seed cosines needed
-    # norms are constant per candidate — compute each ONCE (see
-    # _cosine_n; bit-identical to recomputing inside every cosine)
-    norms = [_norm(c[embedding_key]) for c in remaining]
-    sel_norm = _norm(selected[0][embedding_key])
-    best_sim = [
-        _cosine_n(c[embedding_key], norms[i],
-                  selected[0][embedding_key], sel_norm)
-        for i, c in enumerate(remaining)
-    ]
-    while remaining and len(selected) < top_k:
-        best_i, best_val = 0, -float("inf")
-        for i, cand in enumerate(remaining):
-            val = (
-                lambda_param * cand[score_key]
-                - (1.0 - lambda_param) * best_sim[i]
-            )
-            if val > best_val:  # strict: first max wins (np.argmax)
-                best_i, best_val = i, val
-        new_sel = remaining.pop(best_i)
-        new_norm = norms.pop(best_i)
-        best_sim.pop(best_i)
-        selected.append(new_sel)
-        for i, cand in enumerate(remaining):
-            s = _cosine_n(
-                cand[embedding_key], norms[i],
-                new_sel[embedding_key], new_norm,
-            )
-            if s > best_sim[i]:
-                best_sim[i] = s
-    return selected
+    rel = np.array([c[score_key] for c in candidates], dtype=np.float64)
+    emb = np.array([c[embedding_key] for c in candidates], dtype=np.float64)
+    norms = np.sqrt(np.einsum("ij,ij->i", emb, emb))
+    cos = (emb @ emb.T) / (np.outer(norms, norms) + 1e-8)
+    # seed: best by relevance score (first max)
+    pick = int(np.argmax(rel))
+    picked = [pick]
+    # running max-similarity to the selected set: it only grows by the
+    # one item appended each round, so one row of `cos` per round
+    max_sim = cos[pick].copy()
+    taken = np.zeros(len(candidates), dtype=bool)
+    taken[pick] = True
+    while len(picked) < min(top_k, len(candidates)):
+        val = lambda_param * rel - (1.0 - lambda_param) * max_sim
+        val[taken] = -np.inf
+        pick = int(np.argmax(val))  # first max wins
+        picked.append(pick)
+        taken[pick] = True
+        np.maximum(max_sim, cos[pick], out=max_sim)
+    return [candidates[i] for i in picked]
 
 
 def rerank(

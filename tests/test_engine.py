@@ -2041,12 +2041,16 @@ def test_interactive_mutation_lineage_compaction(spark):
 
 
 def test_local_admission_gate_caps_concurrency(spark, monkeypatch):
-    """local_max_concurrency: at most N micro-path calls execute
-    concurrently; excess callers park on the semaphore (releasing the
-    GIL) — the measured fix for the 64-caller qps regression."""
+    """local_max_concurrency: at most N micro-path calls score
+    concurrently inside ``_admit()``; excess callers park on the
+    semaphore (releasing the GIL) — the measured fix for the 64-caller
+    qps regression. The gate is always present."""
+    import contextlib
     import threading
     import time as _time
 
+    with pytest.raises(ValueError):
+        MultiModalSearchEngine(spark, dim=16, local_max_concurrency=0)
     eng = MultiModalSearchEngine(spark, dim=16, local_max_concurrency=2)
     eng.batch_ingest(
         [{"content": f"gate doc {i}", "modality": "text"}
@@ -2054,29 +2058,88 @@ def test_local_admission_gate_caps_concurrency(spark, monkeypatch):
     )
     eng.search("gate doc 1", k=2)  # build cache
 
-    state = {"active": 0, "peak": 0}
+    state = {"active": 0, "peak": 0, "entered": 0}
     lock = threading.Lock()
-    inner = eng._search_local_admitted
+    gate = eng._admit
 
-    def tracked(*a, **kw):
-        with lock:
-            state["active"] += 1
-            state["peak"] = max(state["peak"], state["active"])
-        _time.sleep(0.05)  # hold the section so overlap is observable
-        try:
-            return inner(*a, **kw)
-        finally:
+    @contextlib.contextmanager
+    def tracked():
+        with gate():
             with lock:
-                state["active"] -= 1
+                state["active"] += 1
+                state["entered"] += 1
+                state["peak"] = max(state["peak"], state["active"])
+            _time.sleep(0.05)  # hold the section so overlap is observable
+            try:
+                yield
+            finally:
+                with lock:
+                    state["active"] -= 1
 
-    monkeypatch.setattr(eng, "_search_local_admitted", tracked)
+    monkeypatch.setattr(eng, "_admit", tracked)
     threads = [
         threading.Thread(target=lambda: eng.search("gate doc 3", k=2))
         for _ in range(8)
     ]
     [t.start() for t in threads]
     [t.join() for t in threads]
+    assert state["entered"] == 8, state  # every local search was gated
     assert state["peak"] <= 2, state
+
+
+def test_local_paths_call_layer_hooks_by_module_attribute(spark, monkeypatch):
+    """The benchmark's traced run wraps ``knn.topk_rows_1d`` /
+    ``knn.topk_rows_2d`` and ``engine.rerank`` by module attribute, so
+    the micro-path must look those names up when it is called, not bind
+    them at import: each counting wrapper must see a call from a local
+    plain, filtered, diversity and batch search."""
+    from multimodal_vector_db_spark import engine as engine_mod
+    from multimodal_vector_db_spark.operators import knn
+
+    calls = {}
+    for mod, name in ((knn, "topk_rows_1d"), (knn, "topk_rows_2d"),
+                      (engine_mod, "rerank")):
+        def counting(*a, _inner=getattr(mod, name), _name=name, **kw):
+            calls[_name] = calls.get(_name, 0) + 1
+            return _inner(*a, **kw)
+
+        monkeypatch.setattr(mod, name, counting)
+    eng = MultiModalSearchEngine(spark, dim=16)
+    eng.batch_ingest(
+        [{"content": f"hook doc {i}", "modality": ["text", "image"][i % 2]}
+         for i in range(40)]
+    )
+    eng.search("hook doc 1", k=3)
+    assert eng.last_route["route"] == "exact-local"
+    eng.search("hook doc 2", k=3, filter_content_type="image")
+    eng.search("hook doc 3", k=3, strategy="diversity")
+    eng.search_batch(["hook doc 4", "hook doc 5"], k=3)
+    assert eng.last_route["route"] == "exact-local"
+    assert set(calls) == {"topk_rows_1d", "topk_rows_2d", "rerank"}, calls
+
+
+def test_remove_keeps_append_capacity(spark):
+    """A remove copies the kept rows into buffers with spare capacity,
+    so the next interactive ingest appends in place instead of growing
+    (copying) the whole resident matrix."""
+    import numpy as np
+
+    eng = MultiModalSearchEngine(spark, dim=16)
+    eng.batch_ingest(
+        [{"content": f"cap doc {i}", "modality": "text"} for i in range(40)]
+    )
+    eng.search("cap doc 1", k=2)  # build the resident block
+    eng.remove([3, 7])
+    before = eng._local_cache["clip"]
+    eng.batch_ingest(
+        [{"content": f"cap late {i}", "modality": "text"} for i in range(16)]
+    )
+    after = eng._local_cache["clip"]
+    assert after["epoch"] == eng._epoch
+    assert len(after["ids"]) == 40 - 2 + 16
+    assert np.shares_memory(before["emb"], after["emb"])
+    assert eng.search("cap late 5", k=1)[0]["content"] == "cap late 5"
+    assert eng.last_route["route"] == "exact-local"
 
 
 def test_incremental_cache_parity_under_random_mutation_sequences(spark):

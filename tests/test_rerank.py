@@ -3,7 +3,13 @@ cases — SURVEY.md §5 layer 2 style)."""
 
 from __future__ import annotations
 
-from multimodal_vector_db_spark.operators.rerank import mmr_rerank, rerank
+import random
+
+from multimodal_vector_db_spark.operators.rerank import (
+    _cosine,
+    mmr_rerank,
+    rerank,
+)
 
 
 def _cands():
@@ -50,3 +56,41 @@ def test_missing_embedding_returns_input_truncated():
 def test_empty_input():
     assert mmr_rerank([], top_k=5) == []
     assert rerank([], strategy="diversity", top_k=5) == []
+
+
+def _greedy_on_cosine(cands, top_k, lam):
+    """Plain greedy MMR over the ``_cosine`` spec: every step recomputes
+    each remaining candidate's max similarity to the whole selected set
+    and takes the first max."""
+    left = list(range(len(cands)))
+    sel = [max(left, key=lambda i: (cands[i]["sim"], -i))]
+    left.remove(sel[0])
+    while left and len(sel) < top_k:
+        vals = [
+            lam * cands[i]["sim"]
+            - (1 - lam) * max(
+                _cosine(cands[i]["embedding"], cands[j]["embedding"])
+                for j in sel
+            )
+            for i in left
+        ]
+        sel.append(left.pop(vals.index(max(vals))))
+    return [cands[i]["id"] for i in sel]
+
+
+def test_mmr_matches_plain_greedy_on_cosine_spec():
+    """On seeded random candidate sets the vectorized MMR picks the
+    same ids, in the same order, as the plain greedy on ``_cosine``."""
+    for seed in range(30):
+        rng = random.Random(seed)
+        n = rng.randint(1, 50)
+        d = rng.choice([2, 8, 64])
+        cands = [
+            {"id": 100 + i, "sim": rng.uniform(-1, 1),
+             "embedding": [rng.gauss(0, 1) for _ in range(d)]}
+            for i in range(n)
+        ]
+        for lam in (0.5, 0.7):
+            top_k = rng.randint(1, n + 2)
+            got = [c["id"] for c in mmr_rerank(cands, top_k, lam)]
+            assert got == _greedy_on_cosine(cands, top_k, lam), (seed, lam)
