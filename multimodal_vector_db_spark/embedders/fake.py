@@ -17,6 +17,7 @@ property the engine's space-checking must defend against.
 from __future__ import annotations
 
 import hashlib
+import threading
 
 import numpy as np
 import pandas as pd
@@ -26,13 +27,22 @@ from pyspark.sql import types as T
 
 DEFAULT_DIM = 64
 
+#: one generator per thread, re-seeded per call: ``seed()`` restores
+#: exactly the state ``RandomState(seed)`` starts in (cached Gaussian
+#: included), so the draws are bit-identical, while constructing a new
+#: ``RandomState`` costs most of a call (≈170 of ≈200 µs at 512-d)
+_local = threading.local()
+
 
 def fake_embed_numpy(text: str, space: str = "clip", dim: int = DEFAULT_DIM) -> np.ndarray:
     """Driver-side single-item form (reference: ``BaseEmbedder.embed``)."""
     seed = int.from_bytes(
         hashlib.md5(f"{space}:{text}".encode()).digest()[:4], "big"
     )
-    rng = np.random.RandomState(seed)
+    rng = getattr(_local, "rng", None)
+    if rng is None:
+        rng = _local.rng = np.random.RandomState()
+    rng.seed(seed)
     v = rng.normal(size=dim).astype(np.float32)
     v /= np.linalg.norm(v)
     return v

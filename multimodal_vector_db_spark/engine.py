@@ -61,6 +61,32 @@ _ITEMS_SCHEMA = (
 )
 
 
+@functools.lru_cache(maxsize=16)  # keyed by the module's DDL constants
+def _arrow_schema(ddl: str):
+    """The Spark ``StructType`` and Arrow schema of a DDL schema string."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def _arrow_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``ddl`` column
+    order), sent to the JVM as one Arrow table, which Spark keeps as a
+    ``LocalRelation``. ``createDataFrame(rows, ddl)`` would parallelize
+    a pickled Python RDD instead, which every later action over the
+    frame runs again as Python worker tasks. Same schema and values."""
+    import pyarrow as pa
+
+    struct, schema = _arrow_schema(ddl)
+    cols = zip(*rows) if rows else ([] for _ in schema)
+    table = pa.table(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def _serialized_mutation(fn):
     """Serialize corpus MUTATIONS (round 12): two concurrent writers
     racing through ``_next_id`` would mint the same ids, tear the
@@ -112,15 +138,16 @@ def _capacity(n: int) -> int:
 
 @dataclasses.dataclass(frozen=True)
 class _ResidentBlock:
-    """One space's LIVE rows held on the driver for the micro-path:
+    """One space's rows held on the driver for the micro-path:
     ``ids`` / float64 ``emb`` / ``modality`` are the first ``len(ids)``
     rows of backing buffers with append capacity (``bufs``),
-    ``payload`` the row dicts, ``bytes`` the estimated resident
-    footprint the block was admitted at, ``epoch`` the corpus epoch it
-    reflects. Replace-not-mutate: :meth:`extend` and :meth:`without`
-    return a new block and never write a row an existing block can
-    see, so a concurrent reader keeps a consistent view. Fields also
-    read by key (``block["ids"]``)."""
+    ``payload`` the row dicts, ``live`` the rows' live flags (None when
+    every row is live), ``bytes`` the estimated resident footprint of
+    the LIVE rows, ``epoch`` the corpus epoch it reflects.
+    Replace-not-mutate: :meth:`extend` and :meth:`without` return a new
+    block and never write a row or flag an existing block can see, so
+    a concurrent reader keeps a consistent view. Fields also read by
+    key (``block["ids"]``)."""
 
     epoch: int
     ids: np.ndarray
@@ -129,13 +156,33 @@ class _ResidentBlock:
     payload: list
     bytes: int
     bufs: tuple
+    live: np.ndarray | None = None
 
     def __getitem__(self, key: str) -> Any:
         return getattr(self, key)
 
+    @property
+    def n_live(self) -> int:
+        if self.live is None:
+            return len(self.ids)
+        return int(np.count_nonzero(self.live))
+
+    def rows(self, modality: str | None = None) -> np.ndarray | None:
+        """Indices of the live rows (of ``modality`` when given), or
+        None when that is every row — the selection a scorer applies
+        to the rows of ``S``."""
+        if modality is None:
+            return None if self.live is None else np.nonzero(self.live)[0]
+        hit = self.modality == modality
+        if self.live is not None:
+            hit &= self.live
+        return np.nonzero(hit)[0]
+
     @classmethod
-    def _over(cls, epoch, bufs, n, payload, nbytes) -> "_ResidentBlock":
-        return cls(epoch, *(b[:n] for b in bufs), payload, nbytes, bufs)
+    def _over(
+        cls, epoch, bufs, n, payload, nbytes, live=None
+    ) -> "_ResidentBlock":
+        return cls(epoch, *(b[:n] for b in bufs), payload, nbytes, bufs, live)
 
     @classmethod
     def build(
@@ -157,37 +204,59 @@ class _ResidentBlock:
                 np.take(col, rows, axis=0, out=buf[:n], mode="clip")
         return cls._over(epoch, bufs, n, payload, nbytes)
 
+    def _compact(self, epoch, nbytes, cap=0) -> "_ResidentBlock":
+        """The live rows alone, copied into fresh buffers."""
+        keep = self.rows()
+        return self.build(
+            epoch, self.ids, self.emb, self.modality,
+            self.payload if keep is None else [self.payload[i] for i in keep],
+            nbytes, rows=keep, cap=cap,
+        )
+
     def restamp(self, epoch: int) -> "_ResidentBlock":
         return dataclasses.replace(self, epoch=epoch)
 
     def extend(self, epoch, ids, emb, modality, payload, nbytes):
         """Append rows in the buffers' spare tail (readers' views end
-        before it); grow by copying only when the tail is full."""
+        before it); grow by copying only when the tail is full, and
+        then leave the removed rows behind."""
         n, m = len(self.ids), len(ids)
-        bufs = self.bufs
-        if n + m > len(bufs[0]):
-            bufs = self.build(
-                epoch, self.ids, self.emb, self.modality, [], 0,
-                cap=_capacity(n + m),
-            ).bufs
-        for buf, col in zip(bufs, (ids, emb, modality)):
+        block = self
+        if n + m > len(self.bufs[0]):
+            block = self._compact(epoch, 0, cap=_capacity(self.n_live + m))
+            n = len(block.ids)
+        for buf, col in zip(block.bufs, (ids, emb, modality)):
             buf[n : n + m] = col
-        return self._over(epoch, bufs, n + m, self.payload + payload, nbytes)
+        live = (
+            None
+            if block.live is None
+            else np.concatenate([block.live, np.ones(m, bool)])
+        )
+        return self._over(
+            epoch, block.bufs, n + m, block.payload + payload, nbytes, live
+        )
 
     def without(self, epoch: int, drop, dim: int) -> "_ResidentBlock":
-        """The block minus the rows whose id is in ``drop``, copied into
-        buffers with headroom so the next append stays in place."""
+        """The block minus the rows whose id is in ``drop``: the same
+        buffers under a new live mask, so no row is copied. The removed
+        rows are dropped physically once they outnumber the append
+        headroom rule (more rows held than ``_capacity`` of the live
+        ones)."""
         hit = np.isin(self.ids, np.asarray(drop, dtype=np.int64))
+        if self.live is not None:
+            hit &= self.live
         if not hit.any():
             return self.restamp(epoch)
-        keep = np.nonzero(~hit)[0]
         gone = [self.payload[i] for i in np.nonzero(hit)[0]]
-        return self.build(
-            epoch, self.ids, self.emb, self.modality,
-            [self.payload[i] for i in keep],
-            self.bytes - _rows_bytes(gone, dim),
-            rows=keep,
+        out = dataclasses.replace(
+            self,
+            epoch=epoch,
+            bytes=self.bytes - _rows_bytes(gone, dim),
+            live=~hit if self.live is None else self.live & ~hit,
         )
+        if len(out.ids) > _capacity(out.n_live):
+            return out._compact(epoch, out.bytes)
+        return out
 
 
 @dataclasses.dataclass(frozen=True)
@@ -241,18 +310,18 @@ class MultiModalSearchEngine:
         self._embed = embed_fn or (
             lambda text, space: fake_embed_numpy(text, space, dim).tolist()
         )
-        # interactive-ingest buffer (round 12): rows appended by
-        # batch_ingest as schema-ordered tuples, flushed into the
-        # DataFrame LAZILY — one createDataFrame + union before the
-        # next Spark-path read instead of one per call. The ~80 ms
-        # py4j createDataFrame floor SCALE.md profiled under the
-        # ingest/search alternation was the per-call flush; buffering
-        # makes a single-row ingest a pure driver-side append (the
-        # reference's add_vectors is an in-process append,
-        # vector_index.py:94-103). `self.items` is a property whose
-        # getter flushes, so every Spark-path consumer sees a corpus
-        # that already contains the buffered rows.
+        # interactive write buffers (round 12): rows appended by
+        # batch_ingest as schema-ordered tuples, and ids tombstoned by
+        # remove, flushed into the DataFrame LAZILY — one Arrow-built
+        # frame + union, then one `deleted` projection, before the
+        # next Spark-path read instead of one plan step per call. A
+        # write is then a pure driver-side append (the reference's
+        # add_vectors is an in-process append and mark_deleted sets a
+        # flag, vector_index.py:94-103 and :212-222). `self.items` is
+        # a property whose getter flushes, so every Spark-path
+        # consumer sees every buffered row and tombstone.
         self._pending: list[tuple] = []
+        self._tombstones: set[int] = set()
         self._pending_lock = threading.Lock()
         #: serializes corpus mutations (see ``_serialized_mutation``);
         #: RLock so a mutator may call another (ingest_content →
@@ -283,15 +352,15 @@ class MultiModalSearchEngine:
         # max-id agg per call — round 11, the ingest/search-alternation
         # cost contract). None = unknown → one agg, then cached.
         self._max_id: int | None = -1 if items is None else None
-        # interactive mutations since the last lineage compaction —
-        # every batch_ingest stacks a union and every remove a project
-        # on `items`, so a long ingest/remove stream would grow
-        # Catalyst's plan depth without bound (planning cost per later
-        # Spark action ∝ chain length). Every _COMPACT_EVERY mutations
-        # the chain is cut with a LAZY localCheckpoint (no job — the
-        # job-free ingest contract holds; the checkpoint materializes
-        # with the next Spark action, which was going to execute the
-        # chain anyway).
+        # write-buffer flushes since the last lineage compaction —
+        # every flush stacks a union (buffered ingests) and a project
+        # (buffered tombstones) on `items`, so a long ingest/remove
+        # stream read in between would grow Catalyst's plan depth
+        # without bound (planning cost per later Spark action ∝ chain
+        # length). Every _COMPACT_EVERY flushes the chain is cut with a
+        # LAZY localCheckpoint (no job — the job-free write contract
+        # holds; the checkpoint materializes with the next Spark
+        # action, which was going to execute the chain anyway).
         self._mutations_since_compact = 0
         # per-space IVF coarse index for the auto route (build_ann_index)
         self._ann: dict[str, dict] = {}
@@ -386,8 +455,8 @@ class MultiModalSearchEngine:
     _COMPACT_EVERY = 64
 
     def _maybe_compact_lineage(self) -> None:
-        """Cut the items plan chain after a run of interactive
-        mutations (see ``_mutations_since_compact``). Lazy: no Spark
+        """Cut the items plan chain after a run of write-buffer
+        flushes (see ``_mutations_since_compact``). Lazy: no Spark
         job here; the truncation is realized by whichever action runs
         next. (On a multi-node cluster prefer a checkpoint dir for
         executor-loss durability; local mode has no such loss mode —
@@ -406,35 +475,39 @@ class MultiModalSearchEngine:
     @property
     def items(self) -> DataFrame | None:
         """The corpus DataFrame. Reading it FLUSHES the interactive
-        ingest buffer first (one createDataFrame + lazy union for the
-        whole buffered run), so every Spark-path consumer — searches
-        over an over-budget space, save(), the SQL view, external
-        callers — observes a corpus that includes every ingested row.
-        The micro-path deliberately bypasses this getter while its
-        cache is valid (the buffered rows were absorbed into the cache
-        at ingest time), which is what keeps a single-row
-        ingest/search alternation free of the ~80 ms py4j
-        createDataFrame floor."""
+        write buffers first (see :meth:`_flush_pending`), so every
+        Spark-path consumer — searches over an over-budget space,
+        save(), the SQL view, external callers — observes a corpus
+        that includes every ingested row and honors every remove. The
+        micro-path deliberately bypasses this getter while its cache
+        is valid (the buffered writes were applied to the cache when
+        they were made), which keeps an interactive ingest/remove/
+        search alternation free of Spark calls."""
         self._flush_pending()
         return self._items_df
 
     @items.setter
     def items(self, df: DataFrame | None) -> None:
-        # wholesale corpus replace: buffered rows belong to the corpus
-        # being replaced and go with it (every INTERNAL reassign reads
-        # the getter on its right-hand side first, so its buffer is
-        # already empty — this branch only fires on an external
-        # replace, where dropping the old corpus's tail is the point)
+        # wholesale corpus replace: buffered rows and tombstones belong
+        # to the corpus being replaced and go with it (internal
+        # mutations go through _transform_items, which flushes; only
+        # an external replace lands here, where dropping the old
+        # corpus's buffered writes is the point)
         with self._pending_lock:
             self._pending = []
+            self._tombstones = set()
             self._items_df = df
 
     def _flush_pending(self) -> None:
-        """Union the buffered interactive ingests into the DataFrame.
-        Job-free (createDataFrame + unionByName are both lazy); one
-        flush absorbs ANY number of buffered batch_ingest calls, so
-        the plan chain grows per flush, not per ingest — the lineage
-        compaction counter advances here for the same reason."""
+        """Apply the buffered interactive writes to the DataFrame: the
+        buffered rows as ONE Arrow-built frame (a JVM-local
+        ``LocalRelation``, so later reads run no Python tasks for it)
+        unioned in, then every buffered tombstone as ONE ``deleted``
+        projection. Job-free (both are lazy plan steps); one flush
+        absorbs ANY number of buffered ``batch_ingest`` and ``remove``
+        calls, so the plan chain grows per flush, not per write — the
+        lineage compaction counter advances here for the same
+        reason."""
         with self._pending_lock:
             flushed = self._flush_pending_locked()
         if flushed:
@@ -442,32 +515,41 @@ class MultiModalSearchEngine:
 
     def _flush_pending_locked(self) -> bool:
         """Flush body; caller holds ``_pending_lock``. Returns whether
-        anything was flushed."""
-        if not self._pending:
-            return False
+        the plan grew."""
         data, self._pending = self._pending, []
-        new = self.spark.createDataFrame(data, _ITEMS_SCHEMA)
-        self._items_df = (
-            new
-            if self._items_df is None
-            else self._items_df.unionByName(
-                new, allowMissingColumns=True
+        dead, self._tombstones = self._tombstones, set()
+        df = self._items_df
+        if data:
+            new = _arrow_frame(self.spark, data, _ITEMS_SCHEMA)
+            df = (
+                new
+                if df is None
+                else df.unionByName(new, allowMissingColumns=True)
             )
-        )
-        return True
+        if dead and df is not None:
+            # one SQL predicate over int ids: one JVM call however many
+            # ids (``isin`` sends each id as its own literal)
+            hit = F.expr(f"id IN ({', '.join(map(str, sorted(dead)))})")
+            df = df.withColumn(
+                "deleted",
+                F.when(hit, F.lit(True)).otherwise(F.col("deleted")),
+            )
+        grew = df is not self._items_df
+        self._items_df = df
+        return grew
 
     def _transform_items(self, fn) -> None:
         """Atomically replace the corpus DataFrame with ``fn(current)``.
-        Every INTERNAL mutation (union-append, tombstone withColumn,
-        lineage checkpoint) must go through here rather than
-        ``self.items = self.items...``: the getter-then-setter form has
-        a lost-update race — a concurrent ``batch_ingest`` buffering
-        rows between the getter's flush and the setter (which clears
-        the buffer on external replace) would silently drop them from
-        the Spark-side corpus. Here the flush, the transform, and the
-        assignment all happen under the buffer lock, and the buffer is
-        never cleared — rows pended mid-transform stay pended and ride
-        the next flush. ``fn`` only builds lazy plans (no Spark job
+        Every INTERNAL mutation that is not a buffered write (bulk
+        union-append, lineage checkpoint) must go through here rather
+        than ``self.items = self.items...``: the getter-then-setter
+        form has a lost-update race — a concurrent ``batch_ingest`` or
+        ``remove`` buffering between the getter's flush and the setter
+        (which clears the buffers on external replace) would silently
+        drop its write from the Spark-side corpus. Here the flush, the
+        transform, and the assignment all happen under the buffer lock
+        — writes buffered mid-transform stay buffered and ride the next
+        flush. ``fn`` only builds lazy plans (no Spark job
         runs under the lock)."""
         with self._pending_lock:
             self._flush_pending_locked()
@@ -525,6 +607,11 @@ class MultiModalSearchEngine:
             )
         with self._pending_lock:
             self._pending.extend(data)
+            # a buffered tombstone for an id minted only now named no
+            # row when it was made, so it must not hide the new row
+            self._tombstones.difference_update(
+                range(start_id, start_id + len(rows))
+            )
         prev_epoch = self._epoch
         self._epoch += 1
         self._max_id = start_id + len(rows) - 1
@@ -598,7 +685,7 @@ class MultiModalSearchEngine:
             offsets.append((pid, running))
             running += counts[pid]
         off_df = F.broadcast(
-            self.spark.createDataFrame(offsets, "__pid int, __off long")
+            _arrow_frame(self.spark, offsets, "__pid int, __off long")
         )
         # within-partition row numbers: the window key is __pid itself,
         # so each shuffle group is exactly one input partition — a
@@ -672,18 +759,16 @@ class MultiModalSearchEngine:
     @_serialized_mutation
     def remove(self, ids: list[int]) -> None:
         """Soft delete — and unlike the reference's write-only tombstone
-        (vector_index.py:212-222), every search honors it. Valid
-        micro-path caches are PRUNED in place (tombstoned rows leave
-        the active view), so interleaved remove/search stays
-        collect-free like the ingest path."""
-        self._transform_items(
-            lambda cur: cur.withColumn(
-                "deleted",
-                F.when(F.col("id").isin(ids), F.lit(True)).otherwise(
-                    F.col("deleted")
-                ),
-            )
-        )
+        (vector_index.py:212-222), every search honors it. Spark-free
+        like :meth:`batch_ingest`: the ids join the tombstone buffer
+        (``_tombstones``), which reaches the DataFrame as one
+        ``deleted`` projection at the next Spark-path read, and valid
+        micro-path blocks mask the rows out without copying the
+        matrix. Ids that name no row are a no-op, on an engine with no
+        corpus too."""
+        ids = [int(i) for i in ids]
+        with self._pending_lock:
+            self._tombstones.update(ids)
         prev_epoch = self._epoch
         self._epoch += 1
         for space, block in list(self._local_cache.items()):
@@ -691,7 +776,6 @@ class MultiModalSearchEngine:
                 self._local_cache[space] = block.without(
                     self._epoch, ids, self.dim
                 )
-        self._maybe_compact_lineage()
 
     # -- ANN route (SURVEY §4's deferred planner rule, rounds 8-9) ------
     def build_ann_index(
@@ -1185,7 +1269,8 @@ class MultiModalSearchEngine:
         # same blow-up nearest_centroid hits past ~16 cells)
         covered = corpus.select("id", "embedding").join(assign, "id")
         cdf = F.broadcast(
-            self.spark.createDataFrame(
+            _arrow_frame(
+                self.spark,
                 [(i, [float(v) for v in c]) for i, c in enumerate(centroids)],
                 "cluster_id int, __centroid array<double>",
             )
@@ -1578,7 +1663,7 @@ class MultiModalSearchEngine:
             mb = block.bytes / (1024 * 1024)
             d = _Route(
                 "exact-local",
-                f"{space!r} corpus {len(block.ids)} rows × dim {self.dim}: "
+                f"{space!r} corpus {block.n_live} rows × dim {self.dim}: "
                 f"~{mb:.1f} MB estimated resident footprint (vectors "
                 "+ payload strings) within local_exact_budget — driver-"
                 "resident exact scan (same BLAS kernel + tie-break as "
@@ -2019,8 +2104,8 @@ class MultiModalSearchEngine:
                 # vectors ride the task closure — no query-DF collect job
                 scored = knn.knn_join_blocked(corpus, qs, k=k)
             else:
-                qdf = self.spark.createDataFrame(
-                    qs, "query_id long, q_emb array<double>"
+                qdf = _arrow_frame(
+                    self.spark, qs, "query_id long, q_emb array<double>"
                 )
                 scored = knn.knn_join(corpus, qdf, k=k)
             pairs = [
@@ -2348,11 +2433,7 @@ class MultiModalSearchEngine:
 
         out: list[list[dict[str, Any]]] = [[] for _ in qvecs]
         with self._admit():
-            sel = (
-                None
-                if modality is None
-                else np.nonzero(block.modality == modality)[0]
-            )
+            sel = block.rows(modality)
             ids = block.ids if sel is None else block.ids[sel]
             if not len(ids):
                 return out
@@ -2424,7 +2505,7 @@ class MultiModalSearchEngine:
             ),
         }
         out: dict[int, list[dict[str, Any]]] = {i: [] for i in range(len(qs))}
-        live = [s for s in spaces if len(blocks[s].ids)]
+        live = [s for s in spaces if blocks[s].n_live]
         if not live:
             return out
         with self._admit():
@@ -2449,10 +2530,19 @@ class MultiModalSearchEngine:
                 or cc["cache_epochs"] != epochs
             ):
                 mods = np.concatenate([blocks[s].modality for s in live])
+                # removed rows a block still holds belong to no group
+                alive = np.concatenate(
+                    [
+                        np.ones(len(blocks[s].ids), bool)
+                        if blocks[s].live is None
+                        else blocks[s].live
+                        for s in live
+                    ]
+                )
                 # None-safe ordering: a null modality is its own group
                 # (the Spark window form partitions it too); it sorts last
                 groups = sorted(
-                    set(mods.tolist()), key=lambda g: (g is None, g)
+                    set(mods[alive].tolist()), key=lambda g: (g is None, g)
                 )
                 cc = self._compare_cache = {
                     "cache_epochs": epochs,
@@ -2466,7 +2556,8 @@ class MultiModalSearchEngine:
                     ),
                     "groups": groups,
                     "group_sel": {
-                        g: np.nonzero(mods == g)[0] for g in groups
+                        g: np.nonzero((mods == g) & alive)[0]
+                        for g in groups
                     },
                 }
             # one GEMM per space scores EVERY query at once, then exact
@@ -2583,9 +2674,7 @@ class MultiModalSearchEngine:
         broadcast hash join against the tiny id frame — O(1) plan size,
         one map-side scan."""
         if len(ids) > 128:
-            ids_df = self.spark.createDataFrame(
-                [(i,) for i in ids], "id long"
-            )
+            ids_df = _arrow_frame(self.spark, [(i,) for i in ids], "id long")
             fetch_df = corpus.select("id", *pay).join(
                 F.broadcast(ids_df), "id"
             )
@@ -2712,8 +2801,10 @@ class MultiModalSearchEngine:
         ):
             rows = self._compare_blocked([q], k_per_modality)
         if rows is not None:
-            return self.spark.createDataFrame(
-                [tuple(r.values()) for r in rows[0]], self._COMPARE_SCHEMA
+            return _arrow_frame(
+                self.spark,
+                [tuple(r.values()) for r in rows[0]],
+                self._COMPARE_SCHEMA,
             )
         from pyspark.sql import Window
 
@@ -3012,7 +3103,7 @@ class MultiModalSearchEngine:
             # fresh engine: expose an EMPTY items view with the canonical
             # schema rather than raising AttributeError — SQL exploration
             # (DESCRIBE items, SELECT ... WHERE false) works pre-ingest
-            empty = self.spark.createDataFrame([], _ITEMS_SCHEMA)
+            empty = _arrow_frame(self.spark, [], _ITEMS_SCHEMA)
             empty.createOrReplaceTempView("items")
         else:
             active(self.items).createOrReplaceTempView("items")

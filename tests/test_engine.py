@@ -112,6 +112,74 @@ def test_fake_embedder_properties():
     assert abs(float(a @ c)) < 0.5
 
 
+def _fresh_generator_embed(text, space, dim):
+    """The fake embedder's spec: a NEW RandomState per call."""
+    import hashlib
+
+    import numpy as np
+
+    seed = int.from_bytes(
+        hashlib.md5(f"{space}:{text}".encode()).digest()[:4], "big"
+    )
+    v = np.random.RandomState(seed).normal(size=dim).astype(np.float32)
+    v /= np.linalg.norm(v)
+    return v
+
+
+def test_fake_embedder_reseeding_is_bit_identical():
+    """The embedder re-seeds one generator per thread instead of
+    constructing one per call; every vector must equal the fresh
+    generator's bit for bit, across texts, spaces and widths (odd
+    widths included: the Gaussian draw caches its second value)."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(20)
+    texts = [f"seeded text {rng.getrandbits(40)}" for _ in range(150)]
+    texts += ["", "ünïcode ✓", "x" * 500]
+    for t in texts:
+        for space in ("clip", "clap"):
+            for dim in (7, 8, 64, 512):
+                assert np.array_equal(
+                    fake_embed_numpy(t, space, dim),
+                    _fresh_generator_embed(t, space, dim),
+                ), (t, space, dim)
+
+
+def test_fake_embedder_threads_match_single_thread():
+    """Threads embedding concurrently each re-seed their own
+    generator, so they get the single-threaded vectors (more threads
+    than cores, with a short switch interval so seeds and draws of
+    different threads interleave)."""
+    import sys
+    import threading
+
+    import numpy as np
+
+    texts = [f"thread text {i}" for i in range(200)]
+    want = [fake_embed_numpy(t, "clip", 64) for t in texts]
+    got: dict[int, list] = {}
+    n = 8
+    start = threading.Barrier(n)
+
+    def work(w: int) -> None:
+        start.wait()
+        got[w] = [fake_embed_numpy(t, "clip", 64) for t in texts]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ts = [threading.Thread(target=work, args=(w,)) for w in range(n)]
+        [t.start() for t in ts]
+        [t.join(timeout=60) for t in ts]
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in ts)
+    for w in range(n):
+        assert all(np.array_equal(a, b) for a, b in zip(got[w], want)), w
+
+
 def test_approximate_search_matches_exact_when_shortlist_covers(spark):
     """approximate=True with shortlist >= corpus must return exactly
     the exact path's results (the shortlist is a pure candidate
@@ -1762,8 +1830,8 @@ def test_micro_path_ingest_search_alternation_is_collect_free(
     """Round-11 epoch-rebuild cost contract: once the micro-path cache
     is built, alternating interactive ingest/remove/search cycles run
     entirely driver-side — batch_ingest extends the cache in place
-    (job-free: ids come from the maintained counter), remove prunes it,
-    and no search re-collects the corpus."""
+    (job-free: ids come from the maintained counter), remove masks rows
+    out of it, and no search re-collects the corpus."""
     import pyspark.sql
 
     eng = MultiModalSearchEngine(spark, dim=16)
@@ -1793,18 +1861,9 @@ def test_micro_path_ingest_search_alternation_is_collect_free(
     assert all(r["id"] != victim for r in out2)
     monkeypatch.undo()
 
-    # parity: the in-place-maintained block must be bit-identical to a
-    # fresh rebuild of the same corpus
-    import numpy as np
-
-    maintained = eng._local_cache["clip"]
-    eng._local_cache.pop("clip")
-    rebuilt = eng._local_corpus("clip")
-    assert np.array_equal(maintained["ids"], rebuilt["ids"])
-    assert np.array_equal(maintained["emb"], rebuilt["emb"])
-    assert list(maintained["modality"]) == list(rebuilt["modality"])
-    assert maintained["payload"] == rebuilt["payload"]
-    assert maintained["bytes"] == rebuilt["bytes"]
+    # parity: the in-place-maintained block's live rows must be
+    # bit-identical to a fresh rebuild of the same corpus
+    _assert_matches_rebuild(eng, "clip")
 
 
 def test_incremental_cache_extension_respects_budget(spark):
@@ -2118,28 +2177,92 @@ def test_local_paths_call_layer_hooks_by_module_attribute(spark, monkeypatch):
     assert set(calls) == {"topk_rows_1d", "topk_rows_2d", "rerank"}, calls
 
 
-def test_remove_keeps_append_capacity(spark):
-    """A remove copies the kept rows into buffers with spare capacity,
-    so the next interactive ingest appends in place instead of growing
-    (copying) the whole resident matrix."""
+def _live_rows(block):
+    """A resident block's live rows, in the layout a rebuild holds."""
     import numpy as np
+
+    keep = block.rows()
+    if keep is None:
+        keep = np.arange(len(block.ids))
+    return {
+        "ids": block.ids[keep],
+        "emb": block.emb[keep],
+        "modality": list(block.modality[keep]),
+        "payload": [block.payload[i] for i in keep],
+        "bytes": block.bytes,
+    }
+
+
+def _assert_matches_rebuild(eng, space, where=None):
+    """The maintained block's live rows equal a fresh rebuild's rows,
+    bit for bit, and so does the footprint estimate."""
+    import numpy as np
+
+    maintained = _live_rows(eng._local_cache[space])
+    eng._local_cache.pop(space)
+    rebuilt = eng._local_corpus(space)
+    assert rebuilt.live is None
+    rebuilt = _live_rows(rebuilt)
+    assert np.array_equal(maintained["ids"], rebuilt["ids"]), (space, where)
+    assert np.array_equal(maintained["emb"], rebuilt["emb"]), (space, where)
+    for key in ("modality", "payload", "bytes"):
+        assert maintained[key] == rebuilt[key], (space, where, key)
+
+
+def test_remove_keeps_append_capacity(spark):
+    """A remove masks rows out of the shared buffers instead of copying
+    the kept ones, so it and the next interactive ingest both leave the
+    resident matrix in place; the removed rows are left behind by the
+    copy that growing the buffers makes anyway, or once they outnumber
+    the append headroom."""
+    import numpy as np
+
+    from multimodal_vector_db_spark.engine import _capacity
 
     eng = MultiModalSearchEngine(spark, dim=16)
     eng.batch_ingest(
         [{"content": f"cap doc {i}", "modality": "text"} for i in range(40)]
     )
     eng.search("cap doc 1", k=2)  # build the resident block
+    built = eng._local_cache["clip"]
     eng.remove([3, 7])
     before = eng._local_cache["clip"]
+    assert np.shares_memory(built["emb"], before["emb"])
     eng.batch_ingest(
         [{"content": f"cap late {i}", "modality": "text"} for i in range(16)]
     )
     after = eng._local_cache["clip"]
     assert after["epoch"] == eng._epoch
-    assert len(after["ids"]) == 40 - 2 + 16
+    assert after.n_live == 40 - 2 + 16 and len(after.ids) == 40 + 16
     assert np.shares_memory(before["emb"], after["emb"])
     assert eng.search("cap late 5", k=1)[0]["content"] == "cap late 5"
     assert eng.last_route["route"] == "exact-local"
+    _assert_matches_rebuild(eng, "clip")
+
+    # growth past the buffers: the copy keeps only the live rows
+    eng.search("cap doc 1", k=2)
+    eng.remove([0, 1])
+    cap = len(eng._local_cache["clip"].bufs[0])
+    eng.batch_ingest(
+        [{"content": f"cap grow {i}", "modality": "text"}
+         for i in range(cap)]
+    )
+    grown = eng._local_cache["clip"]
+    assert grown.live is None
+    assert grown.n_live == 54 - 2 + cap
+    _assert_matches_rebuild(eng, "clip", "growth")
+
+    # removes past the headroom rule: the live rows are copied out
+    eng.search("cap doc 1", k=2)
+    block = eng._local_cache["clip"]
+    n = len(block.ids)
+    drop = [int(i) for i in block.ids[: n - (n - 8) * 2 // 3 + 1]]
+    eng.remove(drop)
+    compacted = eng._local_cache["clip"]
+    assert n > _capacity(n - len(drop))
+    assert compacted.live is None and len(compacted.ids) == n - len(drop)
+    assert not np.shares_memory(block["emb"], compacted["emb"])
+    _assert_matches_rebuild(eng, "clip", "compaction")
 
 
 def test_incremental_cache_parity_under_random_mutation_sequences(spark):
@@ -2179,22 +2302,19 @@ def test_incremental_cache_parity_under_random_mutation_sequences(spark):
             next_content += n
         if step % 10 == 9:
             for space in list(eng._local_cache):
-                maintained = eng._local_cache[space]
-                if maintained["epoch"] != eng._epoch:
+                if eng._local_cache[space]["epoch"] != eng._epoch:
                     continue  # space untouched since a bulk path
-                eng._local_cache.pop(space)
-                rebuilt = eng._local_corpus(space)
-                assert np.array_equal(
-                    maintained["ids"], rebuilt["ids"]
-                ), (space, step)
-                assert np.array_equal(maintained["emb"], rebuilt["emb"])
-                assert list(maintained["modality"]) == list(
-                    rebuilt["modality"]
-                )
-                assert maintained["payload"] == rebuilt["payload"]
-                assert maintained["bytes"] == rebuilt["bytes"], (
-                    space, step,
-                )
+                _assert_matches_rebuild(eng, space, step)
+
+    # one remove that leaves more rows held than the headroom rule
+    # allows: the block is compacted, and still matches a rebuild
+    block = eng._local_cache["clip"]
+    alive = [int(i) for i in _live_rows(block)["ids"]]
+    eng.remove(alive[: len(alive) * 2 // 3])
+    compacted = eng._local_cache["clip"]
+    assert compacted.live is None
+    assert not np.shares_memory(block["emb"], compacted["emb"])
+    _assert_matches_rebuild(eng, "clip", "compaction")
 
 
 def test_interactive_ingest_is_spark_free_and_flushes_before_read(
@@ -2372,10 +2492,10 @@ def test_blas_clamp_idle_restore_without_new_entrant():
 
 
 def test_internal_mutations_preserve_buffered_rows(spark):
-    """Round-12 concurrency fix: every INTERNAL corpus mutation
-    (tombstone withColumn, union-append, lineage checkpoint) goes
-    through the atomic ``_transform_items`` — flush + transform +
-    assign under the buffer lock, buffer never cleared. The previous
+    """Round-12 concurrency fix: every INTERNAL corpus mutation that
+    is not a buffered write (bulk union-append, lineage checkpoint)
+    goes through the atomic ``_transform_items`` — flush + transform +
+    assign under the buffer lock, buffers never cleared. The previous
     ``self.items = self.items...`` form read the getter (flushing),
     built the plan, then hit the SETTER, which clears the pending
     buffer — a batch_ingest landing between the two lost its rows
@@ -2386,12 +2506,12 @@ def test_internal_mutations_preserve_buffered_rows(spark):
     )
     eng.search("base 0", k=1)  # cache built; buffer flushed by read
 
-    # a row buffered (not yet flushed), then an internal tombstone
-    # mutation: the pended row must survive remove()'s flush+transform
+    # a row buffered (not yet flushed), then a remove: the remove is
+    # buffered next to it, and both reach the corpus at the next read
     eng.ingest_content("pended survivor", modality="text")
     assert eng._pending
     eng.remove([0])
-    assert not eng._pending
+    assert eng._pending and eng._tombstones == {0}
     live = eng.items.where(~F.col("deleted"))
     assert live.where(F.col("content") == "pended survivor").count() == 1
     assert live.where(F.col("content") == "base 0").count() == 0
@@ -2504,3 +2624,159 @@ def test_concurrent_writers_mint_unique_ids(spark):
     # the micro-path cache absorbed every row exactly once
     out = eng.search("w2 doc 7", k=1)
     assert out[0]["content"] == "w2 doc 7"
+
+
+# -- interactive writes: buffered tombstones, Arrow-built flushes ------
+
+def test_flushed_writes_reach_spark_as_local_relation(spark):
+    """Buffered ingests reach Spark as one Arrow-built frame, which the
+    JVM holds as a LocalRelation: no pickled Python RDD (LogicalRDD)
+    that every later read of the corpus would run again as Python
+    tasks. Buffered tombstones ride the same flush."""
+    eng = MultiModalSearchEngine(spark, dim=8)
+    eng.batch_ingest(
+        [{"content": f"lr doc {i}", "modality": "text"} for i in range(12)]
+    )
+    assert eng.search("lr doc 3", k=1)[0]["content"] == "lr doc 3"
+    eng.remove([2])
+    eng.batch_ingest(
+        [{"content": f"lr late {i}", "modality": "image"} for i in range(4)]
+    )
+    plan = eng.items._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    live = eng.items.where(~F.col("deleted"))
+    assert live.count() == 15
+    assert live.where(F.col("id") == 2).count() == 0
+    assert eng.items.schema.simpleString() == (
+        "struct<id:bigint,modality:string,space:string,"
+        "embedding:array<float>,dim:int,deleted:boolean,"
+        "content:string,display_name:string>"
+    )
+
+
+def test_cached_remove_runs_no_spark_call_and_copies_no_row(
+    spark, monkeypatch
+):
+    """On a cached engine a remove is driver-side only: no py4j call
+    (the tombstones wait for the next Spark-path read) and no copy of
+    the resident matrix (the new block masks the rows out of the same
+    buffers)."""
+    import numpy as np
+
+    eng = MultiModalSearchEngine(spark, dim=8)
+    eng.batch_ingest(
+        [{"content": f"nc doc {i}", "modality": "text"} for i in range(40)]
+    )
+    eng.search("nc doc 1", k=2)  # builds the block, flushes the buffer
+    before = eng._local_cache["clip"]
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    real = client.send_command
+
+    def counting(*a, **k):
+        sent.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    eng.remove([3, 7, 11])
+    assert sent == []
+    eng.items  # the flush does talk to the JVM: the wrapper sees it
+    assert sent
+    monkeypatch.undo()
+    after = eng._local_cache["clip"]
+    assert after["epoch"] == eng._epoch
+    assert np.shares_memory(before["emb"], after["emb"])
+    assert after.n_live == 37 and len(after.ids) == 40
+    assert all(r["id"] not in (3, 7, 11)
+               for r in eng.search("nc doc 7", k=5))
+
+
+def test_remove_without_corpus_is_noop(spark):
+    """A remove on an engine with no corpus does nothing, like a
+    remove of ids that name no row — including ids minted only by a
+    later ingest."""
+    eng = MultiModalSearchEngine(spark, dim=8)
+    eng.remove([0, 1])
+    assert eng.items is None
+
+    eng = MultiModalSearchEngine(spark, dim=8)
+    eng.remove([0, 1])
+    eng.batch_ingest(
+        [{"content": f"nr doc {i}", "modality": "text"} for i in range(3)]
+    )
+    assert eng.items.where(~F.col("deleted")).count() == 3
+    assert eng.search("nr doc 1", k=1)[0]["id"] == 1
+    assert eng.last_route["route"] == "exact-local"
+
+
+def test_removed_rows_never_served_on_any_route(spark, tmp_path):
+    """A removed id that would rank top-1 is never returned: not by a
+    local plain, filtered, diversity, batch or compare call, nor by the
+    Spark exact-hof, exact-blocked and IVF routes, sql() or save() —
+    while its tombstone is still buffered and after it was flushed."""
+    from multimodal_vector_db_spark.sources.corpus import active
+
+    mods = ["text", "image"]
+    eng = MultiModalSearchEngine(spark, dim=8)
+    eng.batch_ingest(
+        [{"content": f"rm doc {i}", "modality": mods[i % 2]}
+         for i in range(48)]
+    )
+    eng.build_ann_index(space="clip", n_clusters=4, calibrate=False)
+
+    def ids_of(rows):
+        return {r["id"] for r in rows}
+
+    def local(i):
+        q = f"rm doc {i}"
+        out = [
+            eng.search(q, k=3),
+            eng.search(q, k=3, filter_content_type=mods[i % 2]),
+            eng.search(q, k=3, strategy="diversity"),
+            eng.search_batch([q, "rm doc 0"], k=3)[0],
+            eng.compare_modalities_rows(q, k_per_modality=3),
+        ]
+        assert eng.last_route["route"] == "exact-local"
+        return set().union(*map(ids_of, out))
+
+    def sql_ids(i):
+        return {r["id"] for r in eng.sql("SELECT id FROM items").collect()}
+
+    routes = {
+        "exact-hof": lambda i: ids_of(
+            eng.search(f"rm doc {i}", k=3, scorer="hof")),
+        "exact-blocked": lambda i: ids_of(
+            eng.search(f"rm doc {i}", k=3, scorer="blocked")),
+        "ivf": lambda i: ids_of(
+            eng.search(f"rm doc {i}", k=3, route="ivf",
+                       recall_floor=0.95)),
+    }
+    # resident paths: tombstones stay buffered (no Spark read between)
+    for v in (5, 6):
+        assert local(v) >= {v}  # top-1 before the remove
+        eng.remove([v])
+        assert v in eng._tombstones
+        assert v not in local(v)
+        assert v in eng._tombstones
+    # Spark paths: each route meets its own victim buffered, then flushed
+    for v, (name, run) in zip((9, 12, 15), routes.items()):
+        assert v in run(v), name
+        assert eng.last_route["route"] == name
+        eng.remove([v])
+        assert v in eng._tombstones
+        assert v not in run(v), name
+        assert not eng._tombstones
+        assert v not in run(v), name
+    eng.remove([20])
+    assert 20 not in sql_ids(20)
+    assert 20 not in sql_ids(20)
+    # a block rebuilt from the flushed corpus
+    eng._local_cache.clear()
+    for v in (5, 6, 9, 12, 15, 20):
+        assert v not in local(v)
+    # save() while one tombstone is still buffered
+    eng.remove([21])
+    eng.save(str(tmp_path / "rm"))
+    loaded = MultiModalSearchEngine.load(spark, str(tmp_path / "rm"))
+    kept = {r["id"] for r in active(loaded.items).select("id").collect()}
+    assert kept == set(range(48)) - {5, 6, 9, 12, 15, 20, 21}
