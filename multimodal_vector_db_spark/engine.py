@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multimodal_vector_db_spark.embedders.fake import fake_embed_numpy
+from multimodal_vector_db_spark.functions.layout import int_in
 from multimodal_vector_db_spark.operators import knn
 from multimodal_vector_db_spark.operators.rerank import rerank
 from multimodal_vector_db_spark.sources.corpus import (
@@ -289,6 +290,13 @@ class MultiModalSearchEngine:
     #: cumulative drift latch applies (see ``cum_drift_threshold``)
     CUM_DRIFT_MASS_FRACTION = 0.25
 
+    #: growth of a space past the row count a calibration curve was
+    #: measured at, as a fraction of that count, above which the curve
+    #: is stale and re-measured before the route trusts it (round 10 —
+    #: a curve measured on the build-time corpus, with ground truth
+    #: that excludes appended rows, goes stale)
+    RECALIBRATION_FRACTION = 0.25
+
     def __init__(
         self,
         spark: SparkSession,
@@ -299,8 +307,6 @@ class MultiModalSearchEngine:
         drift_threshold: float = 4.0,
         ann_auto_append: bool = True,
         local_exact_budget_bytes: int = 256 * 1024 * 1024,
-        recalibration_fraction: float = 0.25,
-        cum_drift_threshold: float | None = None,
         defer_recalibration: bool = False,
         local_max_concurrency: int = 16,
     ):
@@ -335,15 +341,13 @@ class MultiModalSearchEngine:
             if blocked_threshold_cells is None
             else blocked_threshold_cells
         )
-        # row count for the scorer dispatch: maintained incrementally by
-        # the ingest paths (no count job per search); None = unknown →
-        # computed once lazily (parquet metadata count) and cached.
+        # per-SPACE row counts — the ANN coverage/drift check reads one
+        # space (ingesting into an unrelated space must not flag another
+        # space's index as stale), the scorer dispatch their sum.
+        # Maintained incrementally by the ingest paths (no count job
+        # per search); None = unknown → one groupBy job, then cached.
         # Soft deletes don't decrement — an upper bound only ever errs
         # toward the faster scorer.
-        self._n_rows: int | None = 0 if items is None else None
-        # per-SPACE row counts for the ANN coverage/drift check —
-        # ingesting into an unrelated space must not flag another
-        # space's index as stale. Same lazy contract as _n_rows.
         self._n_rows_by_space: dict[str, int] | None = (
             {} if items is None else None
         )
@@ -412,11 +416,6 @@ class MultiModalSearchEngine:
         #: ``self.items`` (ingest, bulk ingest, remove, audio ingest) so
         #: driver caches can invalidate without comparing DataFrames
         self._epoch = 0
-        #: appended-rows fraction of the calibrated corpus above which
-        #: the route re-runs calibration before trusting the stored
-        #: curve (round 10 — a curve measured on the build-time corpus
-        #: with ground truth that excludes appended rows goes stale)
-        self.recalibration_fraction = recalibration_fraction
         #: when True, a search whose consulted calibration curve has
         #: gone stale serves EXACT (with ``calibration_deferred`` on
         #: ``last_route``) instead of absorbing a full recalibration
@@ -436,20 +435,19 @@ class MultiModalSearchEngine:
         if local_max_concurrency < 1:
             raise ValueError("local_max_concurrency must be >= 1")
         self._local_gate = threading.BoundedSemaphore(local_max_concurrency)
-        #: CUMULATIVE drift latch (round 10): per-batch `drift` only
-        #: sees the latest batch, so many batches each marginally below
-        #: ``drift_threshold`` never latch even when the appended mass
-        #: collectively no longer fits the fitted cells. Once appended
-        #: rows exceed ``CUM_DRIFT_MASS_FRACTION`` of the index, the
-        #: appended-mass-weighted mean ratio is ALSO checked against
-        #: this tighter threshold (default: halfway between perfect fit
-        #: and the per-batch limit — a large mass is held to a stricter
-        #: standard than a single small batch).
-        self.cum_drift_threshold = (
-            1.0 + (drift_threshold - 1.0) / 2.0
-            if cum_drift_threshold is None
-            else cum_drift_threshold
-        )
+
+    @property
+    def cum_drift_threshold(self) -> float:
+        """CUMULATIVE drift latch (round 10): per-batch ``drift`` only
+        sees the latest batch, so many batches each marginally below
+        ``drift_threshold`` never latch even when the appended mass
+        collectively no longer fits the fitted cells. Once appended
+        rows exceed ``CUM_DRIFT_MASS_FRACTION`` of the index, the
+        appended-mass-weighted mean ratio is ALSO checked against this
+        tighter threshold: halfway between perfect fit and the
+        per-batch limit — a large mass is held to a stricter standard
+        than a single small batch."""
+        return 1.0 + (self.drift_threshold - 1.0) / 2.0
 
     #: interactive mutations between lazy lineage compactions
     _COMPACT_EVERY = 64
@@ -527,9 +525,7 @@ class MultiModalSearchEngine:
                 else df.unionByName(new, allowMissingColumns=True)
             )
         if dead and df is not None:
-            # one SQL predicate over int ids: one JVM call however many
-            # ids (``isin`` sends each id as its own literal)
-            hit = F.expr(f"id IN ({', '.join(map(str, sorted(dead)))})")
+            hit = int_in("id", sorted(dead))
             df = df.withColumn(
                 "deleted",
                 F.when(hit, F.lit(True)).otherwise(F.col("deleted")),
@@ -615,8 +611,6 @@ class MultiModalSearchEngine:
         prev_epoch = self._epoch
         self._epoch += 1
         self._max_id = start_id + len(rows) - 1
-        if self._n_rows is not None:
-            self._n_rows += len(rows)
         for r in rows:
             self._bump_space(SPACE_OF[r.get("modality", "text")], 1)
         self._local_cache_extend(prev_epoch, data)
@@ -751,8 +745,6 @@ class MultiModalSearchEngine:
         )
         self._epoch += 1
         self._max_id = start_id + running - 1
-        if self._n_rows is not None:
-            self._n_rows += running  # total of the partition counts
         for sp, n in space_delta.items():
             self._bump_space(sp, n)
 
@@ -778,6 +770,52 @@ class MultiModalSearchEngine:
                 )
 
     # -- ANN route (SURVEY §4's deferred planner rule, rounds 8-9) ------
+    #: the persisted keys of an index record (everything but the
+    #: ``assign`` frame, which is saved as parquet) — ONE tuple for
+    #: :meth:`save` and :meth:`load`
+    _INDEX_KEYS = (
+        "centroids",
+        "rows_at_build",
+        "mean_sq_dist",
+        "appended_rows",
+        "drift",
+        "cum_appended_sq",
+        "cum_drift",
+        "drifted",
+        "calibration",
+        "filter_calibrations",
+    )
+
+    @staticmethod
+    def _index_record(
+        assign: DataFrame,
+        centroids,
+        rows_at_build: int,
+        mean_sq_dist: float,
+        **saved,
+    ) -> dict:
+        """A space's IVF index record (``_ann[space]``): the slim
+        ``(id, cluster_id)`` assignment, the centroids, the covered row
+        count and the build-time cohesion baseline, with fresh append/
+        drift bookkeeping and no calibration curve — or the ``saved``
+        values of a reloaded record (keys of ``_INDEX_KEYS``)."""
+        return {
+            "assign": assign,
+            "centroids": centroids,
+            "rows_at_build": rows_at_build,
+            # build-time cohesion baseline for the drift check: mean
+            # squared row→centroid distance
+            "mean_sq_dist": mean_sq_dist,
+            "appended_rows": 0,
+            "drift": None,
+            "cum_appended_sq": 0.0,
+            "cum_drift": None,
+            "drifted": False,
+            "calibration": None,
+            "filter_calibrations": {},
+            **saved,
+        }
+
     def build_ann_index(
         self,
         space: str = "clip",
@@ -817,16 +855,20 @@ class MultiModalSearchEngine:
         small next to the KMeans fit (measured in BENCH
         ``ann_calibration`` section).
 
+        **Measured filtered-ANN** (round 10): the unfiltered curve is
+        honest only unfiltered — a selective content-type filter
+        concentrates the true top-k into cells nprobe may skip. For
+        each ``calibration_filters`` value the index measures a
+        SEPARATE curve on the filtered corpus (exact ground truth and
+        IVF candidates both filter-restricted, exactly as serving
+        applies the predicate), and the route honors a floor under
+        that filter from ITS curve; other filters keep the exact
+        fallback (see :meth:`calibrate_filter`).
+
         Rows ingested AFTER the build are absorbed by
         :meth:`append_to_ann_index` (auto-invoked by the route when
         ``ann_auto_append``); a drifted append disables the IVF route
         until rebuild."""
-        import math
-
-        from multimodal_vector_db_spark.operators.ann import (
-            ivf_fit_assign,
-        )
-
         if calibration_filters and not calibrate:
             raise ValueError(
                 "build_ann_index: calibration_filters requires "
@@ -834,7 +876,37 @@ class MultiModalSearchEngine:
                 "without it filtered searches would silently keep the "
                 "exact fallback"
             )
-        corpus = active(self.items).where(F.col("space") == space)
+        settings = {
+            "n_queries": calibration_queries,
+            "k": calibration_k,
+            "fractions": calibration_fractions,
+        }
+        curves = (
+            {key: settings for key in (None, *calibration_filters)}
+            if calibrate
+            else {}
+        )
+        return self._fit_ann_index(space, n_clusters, seed, curves)
+
+    def _fit_ann_index(
+        self,
+        space: str,
+        n_clusters: int | None,
+        seed: int,
+        curves: dict[str | None, dict],
+    ) -> dict:
+        """Fit, measure and publish ``space``'s index: KMeans over the
+        live rows, then every curve in ``curves`` (key → measure
+        settings, see :meth:`_measure_curve`) BEFORE the record is
+        published, so no search routes from a half-measured index.
+        Returns the build stats."""
+        import math
+
+        from multimodal_vector_db_spark.operators.ann import (
+            ivf_fit_assign,
+        )
+
+        corpus = self._space_corpus(space, None)
         n = corpus.count()
         if n_clusters is None:
             n_clusters = max(2, int(math.isqrt(n)))
@@ -844,50 +916,15 @@ class MultiModalSearchEngine:
             seed=seed,
             return_cost=True,
         )
-        info: dict[str, Any] = {
-            "assign": assigned.select("id", "cluster_id").localCheckpoint(
-                eager=True
-            ),
-            "centroids": centroids,
-            "rows_at_build": self._space_rows(space),
-            # build-time cohesion baseline for the drift check: mean
-            # squared row→centroid distance (KMeans trainingCost / N)
-            "mean_sq_dist": cost / max(n, 1),
-            "appended_rows": 0,
-            "drift": None,
-            "cum_appended_sq": 0.0,
-            "cum_drift": None,
-            "drifted": False,
-            "calibration": None,
-            "filter_calibrations": {},
-        }
-        if calibrate and n > 0:
-            self._run_calibration(
-                corpus,
-                info,
-                calibration_queries,
-                calibration_k,
-                calibration_fractions,
-            )
-            # measured FILTERED-ANN (round 10): the unfiltered curve is
-            # honest only unfiltered — a selective content-type filter
-            # concentrates the true top-k into cells nprobe may skip,
-            # which is why filtered searches routed exact. For each
-            # declared filter value the index measures a SEPARATE
-            # recall/cost curve on the FILTERED corpus (exact ground
-            # truth and IVF candidates both filter-restricted, exactly
-            # as serving applies the predicate), and the route honors a
-            # floor under that filter from ITS curve. Filters not
-            # declared here keep the exact fallback.
-            for m in calibration_filters:
-                self.calibrate_filter(
-                    space,
-                    m,
-                    calibration_queries=calibration_queries,
-                    calibration_k=calibration_k,
-                    calibration_fractions=calibration_fractions,
-                    _info=info,
-                )
+        info = self._index_record(
+            assigned.select("id", "cluster_id").localCheckpoint(eager=True),
+            centroids,
+            self._space_rows(space),
+            cost / max(n, 1),  # KMeans trainingCost / N
+        )
+        if n > 0:
+            for key, settings in curves.items():
+                self._measure_curve(space, info, key, **settings)
         self._ann[space] = info
         return {
             "space": space,
@@ -904,7 +941,6 @@ class MultiModalSearchEngine:
         calibration_queries: int = 64,
         calibration_k: int = 10,
         calibration_fractions: tuple[float, ...] | None = None,
-        _info: dict | None = None,
     ) -> dict | None:
         """Measure (or refresh) THIS index's recall/cost curve under a
         ``filter_content_type=modality`` predicate — the curve
@@ -916,80 +952,74 @@ class MultiModalSearchEngine:
         matches no live rows — in which case any previously stored
         curve is PURGED (it referenced rows that no longer exist, and
         the route must fall back to exact, not serve from it).
-
-        Direct calls serialize on the index-maintenance lock like
-        every other mutation; internal callers already under it (or
-        pre-publication, in :meth:`build_ann_index`) pass ``_info``."""
-        if _info is None:
-            # the info dict is re-fetched INSIDE the lock: build/attach/
-            # maintain publish a fresh info dict (without holding the
-            # lock), so an info captured before acquisition could be the
-            # replaced, dead one — the measured curve would be written
-            # into a dict no route ever reads again
-            with self._ann_lock:
-                info = self._ann.get(space)
-                if info is None:
-                    raise ValueError(
-                        f"calibrate_filter: no ANN index for space "
-                        f"{space!r}; call build_ann_index first"
-                    )
-                return self.calibrate_filter(
-                    space,
-                    modality,
-                    calibration_queries,
-                    calibration_k,
-                    calibration_fractions,
-                    _info=info,
+        Serializes on the index-maintenance lock like every other
+        mutation."""
+        # the info dict is fetched INSIDE the lock: build/attach/
+        # maintain publish a fresh info dict (without holding the
+        # lock), so an info captured before acquisition could be the
+        # replaced, dead one — the measured curve would be written
+        # into a dict no route ever reads again
+        with self._ann_lock:
+            info = self._ann.get(space)
+            if info is None:
+                raise ValueError(
+                    f"calibrate_filter: no ANN index for space "
+                    f"{space!r}; call build_ann_index first"
                 )
-        info = _info
-        corpus = active(self.items).where(
-            (F.col("space") == space) & (F.col("modality") == modality)
-        )
-        if corpus.limit(1).count() == 0:
-            info.get("filter_calibrations", {}).pop(modality, None)
-            return None
-        curve = self._calibrate_ann(
-            corpus.select("id", "embedding"),
-            info,
-            n_queries=calibration_queries,
-            k=calibration_k,
-            fractions=(
-                _CALIBRATION_FRACTIONS
-                if calibration_fractions is None
-                else calibration_fractions
-            ),
-        )
-        # staleness marker: the SPACE row count at measurement time —
-        # a cheap proxy (the true filtered count would cost a count
-        # job per route check); the curve refreshes when the space
-        # grows past recalibration_fraction, independent of whether a
-        # main curve exists
-        curve["space_rows_at_calibration"] = self._space_rows(space)
-        info.setdefault("filter_calibrations", {})[modality] = curve
-        return curve
+            return self._measure_curve(
+                space,
+                info,
+                modality,
+                calibration_queries,
+                calibration_k,
+                calibration_fractions,
+            )
 
     @staticmethod
-    def _curve_for(info: dict, filter_key: str | None) -> dict | None:
-        """The calibration curve a plan/gate should read: the filter's
-        own measured curve when one is requested, else the main one —
-        ONE definition so the planner and the cost gate can never read
-        different curves."""
-        if filter_key is not None:
-            return info.get("filter_calibrations", {}).get(filter_key)
-        return info.get("calibration")
+    def _curves(info: dict) -> dict[str | None, dict]:
+        """Every stored curve of an index by key: None for the main
+        (filter-free) curve, the content type for a filter curve — ONE
+        definition, so the planner, the cost gate and the refresh can
+        never read different curves."""
+        main = info.get("calibration")
+        return {
+            **({None: main} if main else {}),
+            **info.get("filter_calibrations", {}),
+        }
 
-    def _run_calibration(
+    @staticmethod
+    def _curve_settings(cal: dict) -> dict:
+        """The settings a stored curve was measured at, as
+        :meth:`_measure_curve` keywords — a refresh repeats them."""
+        return {
+            "n_queries": cal.get("n_queries", 64),
+            "k": cal.get("k", 10),
+            "fractions": tuple(p["fraction"] for p in cal.get("points", ())),
+        }
+
+    def _measure_curve(
         self,
-        corpus: DataFrame,
+        space: str,
         info: dict,
-        n_queries: int,
-        k: int,
-        fractions: tuple[float, ...] | None,
-    ) -> None:
-        """Shared calibration entry for built AND attached indexes —
-        one definition so both get the identical measured contract."""
-        info["calibration"] = self._calibrate_ann(
-            corpus.select("id", "embedding"),
+        filter_key: str | None = None,
+        n_queries: int = 64,
+        k: int = 10,
+        fractions: tuple[float, ...] | None = None,
+    ) -> dict | None:
+        """Measure one calibration curve of ``space``'s index on the
+        live rows the route would serve — all of the space's for the
+        main curve (``filter_key`` None), those of one content type for
+        a filter curve — store it on ``info`` and return it. A filter
+        that matches no live rows has its stored curve purged and
+        returns None. Every curve is stamped with the space's row
+        count (``space_rows_at_calibration``, the counter
+        :meth:`_stale_curves` compares, removed rows included)."""
+        corpus = self._space_corpus(space, filter_key)
+        if filter_key is not None and corpus.limit(1).count() == 0:
+            info["filter_calibrations"].pop(filter_key, None)
+            return None
+        curve = self._calibrate_ann(
+            corpus,
             info,
             n_queries=n_queries,
             k=k,
@@ -997,94 +1027,54 @@ class MultiModalSearchEngine:
                 _CALIBRATION_FRACTIONS if fractions is None else fractions
             ),
         )
+        curve["space_rows_at_calibration"] = self._space_rows(space)
+        if filter_key is None:
+            info["calibration"] = curve
+        else:
+            info["filter_calibrations"][filter_key] = curve
+        return curve
 
-    def _main_curve_stale(self, space: str, info: dict) -> bool:
-        # a curve with NO rows_at_calibration marker (manifests saved
-        # before round 10, reloaded via load()) counts as stale the
-        # moment the space has any rows — the same semantics as
-        # _stale_filter_keys' missing-marker default; treating it as
-        # never-stale would pin a pre-marker curve forever no matter
-        # how much the corpus grows
-        cal = info.get("calibration")
-        return bool(
-            cal
-            and cal.get("points")
-            and self._space_rows(space)
-            > (cal.get("rows_at_calibration") or 0)
-            * (1.0 + self.recalibration_fraction)
-        )
-
-    def _stale_filter_keys(self, space: str, info: dict) -> list[str]:
-        """Filter curves whose space-rows staleness marker has been
-        outgrown — checked INDEPENDENTLY of the main curve (an index
-        built with calibrate=False but a calibrated filter must still
-        refresh that filter; curves persisted before the marker
-        existed count as stale once the space grows at all)."""
+    def _stale_curves(self, space: str, info: dict) -> list[str | None]:
+        """Keys of the curves (see :meth:`_curves`) the space has
+        outgrown: its row count exceeds the one the curve was measured
+        at by more than ``RECALIBRATION_FRACTION``. Each curve is
+        judged on its own marker, so a filter curve refreshes with or
+        without a main curve; a curve without a marker (persisted
+        before it existed) is stale once the space has any rows."""
+        limit = 1.0 + self.RECALIBRATION_FRACTION
         rows = self._space_rows(space)
         return [
-            m
-            for m, fcal in info.get("filter_calibrations", {}).items()
-            if rows
-            > fcal.get("space_rows_at_calibration", 0)
-            * (1.0 + self.recalibration_fraction)
+            key
+            for key, cal in self._curves(info).items()
+            if rows > (cal.get("space_rows_at_calibration") or 0) * limit
         ]
 
     def _maybe_recalibrate(self, space: str, info: dict) -> float | None:
-        """Refresh STALE calibration curves: when the live corpus of
-        ``space`` has outgrown a curve's measured row count by more
-        than ``recalibration_fraction``, re-run the same measured
-        recall/cost calibration on the CURRENT corpus (so appended
-        rows are eligible as sampled queries and present in the exact
-        ground truth) at the same n_queries/k/fractions as the stored
-        curve. The main curve and each FILTER curve are checked
-        independently (each carries its own measurement marker).
-        Serialized on the index-maintenance lock; the staleness checks
-        repeat inside it so concurrent searches refresh once. NOTE the
-        refresh runs lazily on the serving path (unless
-        ``defer_recalibration`` routes stale-curve searches exact and
-        leaves this to :meth:`maintain`) — its cost is surfaced on
+        """Refresh STALE calibration curves (:meth:`_stale_curves`):
+        re-measure each on the CURRENT corpus (so appended rows are
+        eligible as sampled queries and present in the exact ground
+        truth) at the settings it was measured at. Serialized on the
+        index-maintenance lock; the staleness check repeats inside it
+        so concurrent searches refresh once. NOTE the refresh runs
+        lazily on the serving path (unless ``defer_recalibration``
+        routes stale-curve searches exact and leaves this to
+        :meth:`maintain`) — its cost is surfaced on
         ``last_route["calibration_sec"]`` when it does run inline.
         Returns the total measured calibration wall seconds, or None
         when nothing was stale."""
-        if not (
-            self._main_curve_stale(space, info)
-            or self._stale_filter_keys(space, info)
-        ):
+        if not self._stale_curves(space, info):
             return None
         with self._ann_lock:
+            stale = self._stale_curves(space, info)
+            curves = self._curves(info)
             total = 0.0
-            did = False
-            if self._main_curve_stale(space, info):
-                cal = info["calibration"]
-                corpus = active(self.items).where(
-                    F.col("space") == space
-                )
-                self._run_calibration(
-                    corpus,
-                    info,
-                    cal.get("n_queries", 64),
-                    cal.get("k", 10),
-                    tuple(p["fraction"] for p in cal["points"]) or None,
-                )
-                total += info["calibration"].get("calibration_sec", 0.0)
-                did = True
-            for m in self._stale_filter_keys(space, info):
-                fcal = info["filter_calibrations"][m]
-                curve = self.calibrate_filter(
-                    space,
-                    m,
-                    calibration_queries=fcal.get("n_queries", 64),
-                    calibration_k=fcal.get("k", 10),
-                    calibration_fractions=(
-                        tuple(p["fraction"] for p in fcal["points"])
-                        or None
-                    ),
-                    _info=info,
+            for key in stale:
+                curve = self._measure_curve(
+                    space, info, key, **self._curve_settings(curves[key])
                 )
                 if curve is not None:
                     total += curve.get("calibration_sec", 0.0)
-                did = True
-            return total if did else None
+            return total if stale else None
 
     def _calibrate_ann(
         self,
@@ -1141,56 +1131,48 @@ class MultiModalSearchEngine:
                     out[qi].append(r["id"])
             return out
 
-        def _median_wall_ms(fn, samples: int = 3) -> float:
-            # single-query walls are one small job each — dominated by
-            # scheduling jitter on small corpora, so the dispatch they
-            # feed (the exact-vs-IVF cost gate) takes the median of 3
-            # instead of trusting one sample (batch walls already
-            # amortize over n_queries and stay single-sample)
+        def _wall_ms(fn, samples: int = 1) -> tuple[float, list]:
+            # the median wall of ``samples`` runs, and the rows of the
+            # last. Single-query walls are one small job each —
+            # dominated by scheduling jitter on small corpora, so the
+            # dispatch they feed (the exact-vs-IVF cost gate) takes the
+            # median of 3 instead of trusting one sample (batch walls
+            # already amortize over n_queries and stay single-sample)
             walls = []
             for _ in range(samples):
                 t0 = time.time()
-                fn()
+                rows = fn()
                 walls.append((time.time() - t0) * 1000.0)
-            walls.sort()
-            return walls[len(walls) // 2]
+            return sorted(walls)[len(walls) // 2], rows
+
+        def exact(qs):
+            return knn_join_blocked(slim, qs, k=k + 1).collect()
+
+        def ivf(qs, nprobe):
+            return ivf_search_blocked(
+                assigned,
+                qs,
+                info["centroids"],
+                k=k + 1,
+                nprobe=nprobe,
+                probe_metric="l2",
+            ).collect()
 
         slim = corpus.select("id", "embedding").persist()
         assigned = slim.join(info["assign"], "id").persist()
         q_one = queries[:1]
+        per_q = 1.0 / max(len(queries), 1)
         try:
             n_rows = slim.count()
-            t0 = time.time()
-            exact_rows = knn_join_blocked(slim, queries, k=k + 1).collect()
-            exact_ms = (time.time() - t0) * 1000.0 / max(len(queries), 1)
+            exact_ms, exact_rows = _wall_ms(lambda: exact(queries))
             truth = _topk_after_self(exact_rows)
-            exact_ms_single = _median_wall_ms(
-                lambda: knn_join_blocked(slim, q_one, k=k + 1).collect()
-            )
+            exact_ms_single, _ = _wall_ms(lambda: exact(q_one), 3)
             n_cells = len(info["centroids"])
             points = []
             for frac in sorted(fractions):
                 nprobe = max(1, math.ceil(frac * n_cells))
-                t0 = time.time()
-                got_rows = ivf_search_blocked(
-                    assigned,
-                    queries,
-                    info["centroids"],
-                    k=k + 1,
-                    nprobe=nprobe,
-                    probe_metric="l2",
-                ).collect()
-                ivf_ms = (time.time() - t0) * 1000.0 / max(len(queries), 1)
-                ivf_ms_single = _median_wall_ms(
-                    lambda: ivf_search_blocked(
-                        assigned,
-                        q_one,
-                        info["centroids"],
-                        k=k + 1,
-                        nprobe=nprobe,
-                        probe_metric="l2",
-                    ).collect()
-                )
+                ivf_ms, got_rows = _wall_ms(lambda: ivf(queries, nprobe))
+                ivf_ms_single, _ = _wall_ms(lambda: ivf(q_one, nprobe), 3)
                 got = _topk_after_self(got_rows)
                 recs = [
                     len(set(got[qi]) & set(t)) / len(t)
@@ -1204,7 +1186,7 @@ class MultiModalSearchEngine:
                         "recall": (
                             sum(recs) / len(recs) if recs else 1.0
                         ),
-                        "ms_per_q": ivf_ms,
+                        "ms_per_q": ivf_ms * per_q,
                         "ms_single": ivf_ms_single,
                     }
                 )
@@ -1213,7 +1195,7 @@ class MultiModalSearchEngine:
             assigned.unpersist()
         return {
             "points": points,  # ascending fraction
-            "exact_ms_per_q": exact_ms,
+            "exact_ms_per_q": exact_ms * per_q,
             "exact_ms_single": exact_ms_single,
             "k": k,
             "n_queries": len(queries),
@@ -1221,9 +1203,9 @@ class MultiModalSearchEngine:
             # staleness test's evidence that a RE-calibration's ground
             # truth covers appended ids (they enter the xxhash64 sample)
             "query_ids": sorted(self_id.values()),
-            # corpus size the curve was measured on; the route
-            # re-calibrates when the live corpus outgrows this by
-            # ``recalibration_fraction`` (round 10)
+            # live rows the curve was measured on (the staleness
+            # marker is ``space_rows_at_calibration``, stamped by
+            # _measure_curve)
             "rows_at_calibration": n_rows,
             "calibration_sec": round(time.time() - t_start, 3),
         }
@@ -1262,7 +1244,7 @@ class MultiModalSearchEngine:
 
         assigned, centroids = open_ivf_index(self.spark, path)
         assign = assigned.select("id", "cluster_id")
-        corpus = active(self.items).where(F.col("space") == space)
+        corpus = self._space_corpus(space, None)
         # drift baseline from the artifact: |x - c|^2 per covered row,
         # centroids joined as a BROADCAST frame (a literal centroid
         # matrix would plan O(n_clusters x dim) expression nodes — the
@@ -1298,29 +1280,23 @@ class MultiModalSearchEngine:
                 f"active rows of space {space!r} — its ids do not "
                 "match the corpus item ids"
             )
-        info: dict[str, Any] = {
-            "assign": assign.localCheckpoint(eager=True),
-            "centroids": centroids,
+        info = self._index_record(
+            assign.localCheckpoint(eager=True),
+            centroids,
             # covered rows only: uncovered ones go through auto-append,
             # which compares its batch against this baseline
-            "rows_at_build": n_cov,
-            "mean_sq_dist": (stats["s"] or 0.0) / max(n_cov, 1),
-            "appended_rows": 0,
-            "drift": None,
-            "cum_appended_sq": 0.0,
-            "cum_drift": None,
-            "drifted": False,
-            "calibration": None,
-            "filter_calibrations": {},
-        }
+            n_cov,
+            (stats["s"] or 0.0) / max(n_cov, 1),
+        )
         self._ann[space] = info
         if self._space_rows(space) != n_cov:
             # absorb rows the artifact predates (and measure their drift)
             self.append_to_ann_index(space)
         if calibrate:
-            self._run_calibration(
-                corpus,
+            self._measure_curve(
+                space,
                 info,
+                None,
                 calibration_queries,
                 calibration_k,
                 calibration_fractions,
@@ -1408,7 +1384,7 @@ class MultiModalSearchEngine:
                     "drift": info["drift"],
                     "drifted": False,
                 }
-            corpus = active(self.items).where(F.col("space") == space)
+            corpus = self._space_corpus(space, None)
             new_rows = corpus.select("id", "embedding").join(
                 info["assign"].select("id"), "id", "left_anti"
             )
@@ -1484,40 +1460,23 @@ class MultiModalSearchEngine:
         st = self.append_to_ann_index(space)
         rebuilt = False
         if info["drifted"] and rebuild_on_drift:
-            cal = info.get("calibration")
-            old_filters = dict(info.get("filter_calibrations", {}))
             # n_clusters re-derives from the CURRENT corpus (sqrt(N) —
             # the build default): a rebuild exists because the corpus
             # outgrew the fitted structure, so pinning the old cell
-            # count would freeze the scan fraction at the old scale
-            self.build_ann_index(
+            # count would freeze the scan fraction at the old scale.
+            # Every previously measured curve is re-measured against the
+            # re-fit cells at its own settings — a rebuild must not
+            # silently demote filtered searches to the exact fallback
+            self._fit_ann_index(
                 space,
-                calibrate=cal is not None,
-                calibration_queries=(
-                    cal.get("n_queries", 64) if cal else 64
-                ),
-                calibration_k=cal.get("k", 10) if cal else 10,
-                calibration_fractions=(
-                    tuple(p["fraction"] for p in cal["points"]) or None
-                    if cal and cal.get("points")
-                    else None
-                ),
+                n_clusters=None,
+                seed=42,
+                curves={
+                    key: self._curve_settings(cal)
+                    for key, cal in self._curves(info).items()
+                },
             )
             info = self._ann[space]
-            # re-measure every previously calibrated filter against the
-            # re-fit cells — a rebuild must not silently demote filtered
-            # searches back to the exact fallback
-            for m, fcal in old_filters.items():
-                self.calibrate_filter(
-                    space,
-                    m,
-                    calibration_queries=fcal.get("n_queries", 64),
-                    calibration_k=fcal.get("k", 10),
-                    calibration_fractions=(
-                        tuple(p["fraction"] for p in fcal["points"])
-                        or None
-                    ),
-                )
             rebuilt = True
         recal_sec = self._maybe_recalibrate(space, info)
         # clear the deferred-serve telemetry: maintain() just performed
@@ -1560,16 +1519,17 @@ class MultiModalSearchEngine:
         measured recall meets the floor; ``None`` if no point does —
         the caller must go exact), else from the module-level
         ``_NPROBE_FRACTION`` fallback. With ``filter_key`` the plan
-        reads the FILTERED curve measured by :meth:`calibrate_filter`
-        (the caller guarantees one exists). The returned cost estimate
-        is depth-matched: batch callers get the batch-amortized wall,
-        single callers the single-query wall (falling back to the
-        batch number for calibrations persisted before round 9).
+        reads the FILTERED curve measured by :meth:`calibrate_filter`,
+        and plans exact (``None``) when the filter has none. The
+        returned cost estimate is depth-matched: batch callers get the
+        batch-amortized wall, single callers the single-query wall
+        (falling back to the batch number for calibrations persisted
+        before round 9).
         Returns ``(nprobe | None, measured_ivf_ms | None, why)``."""
         import math
 
         info = self._ann[space]
-        cal = self._curve_for(info, filter_key)
+        cal = self._curves(info).get(filter_key)
         if cal and cal.get("points"):  # empty points → fraction map
 
             def _est(p: dict) -> float:
@@ -1611,13 +1571,17 @@ class MultiModalSearchEngine:
                 ),
             )
         if filter_key is not None:
-            # no measured curve under this filter — the fraction-map
-            # fallback was never measured filtered, so it cannot
-            # honor the floor here
-            return (
-                None,
-                None,
-                f"no measured curve for filter={filter_key!r}",
+            # filtered-ANN honesty: the unfiltered curve holds only
+            # unfiltered (a selective filter concentrates the true
+            # top-k into cells nprobe may skip), and the fraction-map
+            # fallback was never measured filtered. A filter with its
+            # OWN measured curve (build_ann_index(calibration_filters=…)
+            # / calibrate_filter) routes from it above; others stay
+            # exact.
+            return None, None, (
+                f"content-type filter {filter_key!r} has no measured "
+                "calibration curve — calibrate_filter() to enable "
+                "filtered IVF"
             )
         n_cells = len(info["centroids"])
         for bound, frac in self._NPROBE_FRACTION:
@@ -1755,12 +1719,8 @@ class MultiModalSearchEngine:
             # plan from the filtered curve when one was measured — a
             # forced route must still probe at the depth the FILTERED
             # measurement says the floor needs
-            fk = (
-                filter_key
-                if self._curve_for(self._ann[space], filter_key)
-                is not None
-                else None
-            )
+            curves = self._curves(self._ann[space])
+            fk = filter_key if filter_key in curves else None
             nprobe, _ms, _why = self._ivf_plan(
                 space, recall_floor, filter_key=fk
             )
@@ -1828,60 +1788,39 @@ class MultiModalSearchEngine:
                     f"{self._space_rows(space)} rows in {space!r}); "
                     "append_to_ann_index or rebuild to re-enable"
                 ), extras
-        # once the live corpus has outgrown the calibrated one by
-        # recalibration_fraction, refresh the measured curve on the
+        # once the space has outgrown a curve by
+        # RECALIBRATION_FRACTION, refresh the measured curve on the
         # CURRENT corpus (appended ids enter the xxhash64 query sample
         # and the exact ground truth). With defer_recalibration the
         # hot path never absorbs that sweep: if the curve THIS query
         # consults is stale, serve exact + flag and leave the refresh
         # to maintain(); other curves' staleness is the maintainer's
         # business either way.
-        if self.defer_recalibration:
-            stale_here = (
-                filter_key in self._stale_filter_keys(space, info)
-                if filter_key is not None
-                else self._main_curve_stale(space, info)
-            )
-            if stale_here:
-                import time
-
-                # operational visibility (round 12): with deferral on,
-                # NOTHING refreshes until maintain() runs — a
-                # deployment that forgets to schedule it serves exact
-                # forever (correct, silently slower). Count every
-                # deferred serve and stamp when deferral began so an
-                # operator can alert on last_route/maintain() output.
-                info["n_deferred_serves"] = (
-                    info.get("n_deferred_serves", 0) + 1
-                )
-                info.setdefault("deferred_since", time.time())
-                extras["calibration_deferred"] = True
-                extras["n_deferred_serves"] = info["n_deferred_serves"]
-                extras["deferred_since"] = info["deferred_since"]
-                return None, (
-                    "calibration curve stale (corpus outgrew it by > "
-                    f"{self.recalibration_fraction:.0%}); recalibration "
-                    "deferred to maintain() — exact serves and honors "
-                    "the floor"
-                ), extras
-            prefix = ""
-        else:
+        prefix = ""
+        if not self.defer_recalibration:
             recal_sec = self._maybe_recalibrate(space, info)
-            prefix = "recalibrated; " if recal_sec is not None else ""
             if recal_sec is not None:
+                prefix = "recalibrated; "
                 extras["calibration_sec"] = round(recal_sec, 3)
-        if filter_key is not None and filter_key not in info.get(
-            "filter_calibrations", {}
-        ):
-            # filtered-ANN honesty: the unfiltered curve holds only
-            # unfiltered (a selective filter concentrates the true
-            # top-k into cells nprobe may skip). A filter with its OWN
-            # measured curve (build_ann_index(calibration_filters=…) /
-            # calibrate_filter) routes from it below; others stay exact.
+        elif filter_key in self._stale_curves(space, info):
+            import time
+
+            # operational visibility (round 12): with deferral on,
+            # NOTHING refreshes until maintain() runs — a deployment
+            # that forgets to schedule it serves exact forever
+            # (correct, silently slower). Count every deferred serve
+            # and stamp when deferral began so an operator can alert
+            # on last_route/maintain() output.
+            info["n_deferred_serves"] = info.get("n_deferred_serves", 0) + 1
+            info.setdefault("deferred_since", time.time())
+            extras["calibration_deferred"] = True
+            extras["n_deferred_serves"] = info["n_deferred_serves"]
+            extras["deferred_since"] = info["deferred_since"]
             return None, (
-                f"content-type filter {filter_key!r} has no measured "
-                "calibration curve — calibrate_filter() to enable "
-                "filtered IVF; exact honors the floor"
+                "calibration curve stale (corpus outgrew it by > "
+                f"{self.RECALIBRATION_FRACTION:.0%}); recalibration "
+                "deferred to maintain() — exact serves and honors the "
+                "floor"
             ), extras
         nprobe, ivf_ms, plan_why = self._ivf_plan(
             space, recall_floor, batch=batch, filter_key=filter_key
@@ -1890,7 +1829,7 @@ class MultiModalSearchEngine:
             return None, (
                 f"{prefix}{plan_why} — exact honors the floor"
             ), extras
-        cal = self._curve_for(info, filter_key)
+        cal = self._curves(info).get(filter_key)
         why_cost = ""
         if cal is not None and ivf_ms is not None:
             # measured-cost crossover: both sides timed on THIS corpus
@@ -2193,7 +2132,7 @@ class MultiModalSearchEngine:
                 .drop("__did", "__dname")
             )
         n_new = None
-        if self._n_rows is not None or self._n_rows_by_space is not None:
+        if self._n_rows_by_space is not None:
             new = new.localCheckpoint(eager=True)
             n_new = new.count()
         self._transform_items(
@@ -2208,8 +2147,6 @@ class MultiModalSearchEngine:
         # counter no longer covers them; recompute lazily on next use
         self._max_id = None
         if n_new is not None:
-            if self._n_rows is not None:
-                self._n_rows += n_new
             self._bump_space(AUDIO_SIG_SPACE, n_new)
 
     def search_audio_content(
@@ -2247,8 +2184,6 @@ class MultiModalSearchEngine:
         )
 
     # -- driver-resident exact micro-path (round 10) --------------------
-    _row_payload_bytes = staticmethod(_payload_bytes)
-
     def _local_cache_extend(
         self, prev_epoch: int, data: list[tuple]
     ) -> None:
@@ -2351,7 +2286,7 @@ class MultiModalSearchEngine:
         if self._local_over_budget.get(space) == self._epoch:
             return None
         epoch = self._epoch
-        corpus = active(self.items).where(F.col("space") == space)
+        corpus = self._space_corpus(space, None)
         pay_cols = [
             c for c in corpus.columns if c not in ("embedding", "dim")
         ]
@@ -2478,11 +2413,9 @@ class MultiModalSearchEngine:
         budget = self.local_exact_budget_bytes
         if budget <= 0 or self._corpus_absent():
             return None
-        self._space_rows("clip")  # materialize the per-space map
-        spaces = sorted(
-            s for s, n in self._n_rows_by_space.items() if n > 0
-        )
-        if sum(self._n_rows_by_space[s] for s in spaces) * self.dim * 8 > budget:
+        rows = dict(self._rows_by_space())  # a snapshot: ingests bump it
+        spaces = sorted(s for s, n in rows.items() if n > 0)
+        if sum(rows.values()) * self.dim * 8 > budget:
             return None
         blocks = {}
         for s in spaces:
@@ -2679,25 +2612,25 @@ class MultiModalSearchEngine:
                 F.broadcast(ids_df), "id"
             )
         else:
-            fetch_df = corpus.select("id", *pay).where(
-                F.col("id").isin(ids)
-            )
+            fetch_df = corpus.select("id", *pay).where(int_in("id", ids))
         return {r["id"]: r.asDict() for r in fetch_df.collect()}
 
     def _corpus_rows(self) -> int:
-        """Cached row count for the scorer dispatch; counts once
-        (parquet metadata-backed for loaded corpora) when unknown."""
-        if self._n_rows is None:
-            self._n_rows = self.items.count() if self.items is not None else 0
-        return self._n_rows
+        """Row count for the scorer dispatch: the sum of the per-space
+        counts (see :meth:`_rows_by_space`)."""
+        return sum(self._rows_by_space().values())
 
     def _space_rows(self, space: str) -> int:
-        """Cached PER-SPACE row count — the ANN coverage/drift check
+        """Row count of one space — the ANN coverage/drift check
         compares this, not the global total, so ingesting into an
         unrelated space (e.g. ``ingest_audio_content`` → 'audio_sig')
-        never flags another space's index as stale. Maintained
-        incrementally by every ingest path; computed once (one
-        groupBy-count job) for corpora loaded from disk.
+        never flags another space's index as stale."""
+        return self._rows_by_space().get(space, 0)
+
+    def _rows_by_space(self) -> dict[str, int]:
+        """The cached per-space row counts (removed rows included).
+        Maintained incrementally by every ingest path; computed once
+        (one groupBy-count job) for corpora loaded from disk.
 
         The same job also rides ``max(id)`` (round 12): every search
         routes through here, so by the time the first interactive
@@ -2719,7 +2652,7 @@ class MultiModalSearchEngine:
             if self._max_id is None:
                 ms = [r["m"] for r in rows if r["m"] is not None]
                 self._max_id = max(ms) if ms else -1
-        return self._n_rows_by_space.get(space, 0)
+        return self._n_rows_by_space
 
     def _bump_space(self, space: str, n: int) -> None:
         if self._n_rows_by_space is not None:
@@ -2951,21 +2884,7 @@ class MultiModalSearchEngine:
             storage.save_index(
                 info["assign"],
                 f"{name}_ann_{space}",
-                manifest={
-                    k: info[k]
-                    for k in (
-                        "centroids",
-                        "rows_at_build",
-                        "mean_sq_dist",
-                        "appended_rows",
-                        "drift",
-                        "cum_appended_sq",
-                        "cum_drift",
-                        "drifted",
-                        "calibration",
-                        "filter_calibrations",
-                    )
-                },
+                manifest={k: info[k] for k in self._INDEX_KEYS},
             )
         storage.save_config(
             {
@@ -2986,30 +2905,16 @@ class MultiModalSearchEngine:
             assign, ann_manifest = storage.load_index(
                 spark, f"{name}_ann_{space}"
             )
-            eng._ann[space] = {
-                "assign": assign.select("id", "cluster_id"),
+            # a key an older manifest lacks (or saved as null) keeps
+            # the record's default
+            eng._ann[space] = cls._index_record(
+                assign.select("id", "cluster_id"),
                 **{
                     k: ann_manifest[k]
-                    for k in (
-                        "centroids",
-                        "rows_at_build",
-                        "mean_sq_dist",
-                        "appended_rows",
-                        "drift",
-                        "drifted",
-                        "calibration",
-                    )
+                    for k in cls._INDEX_KEYS
+                    if ann_manifest.get(k) is not None
                 },
-                # round-10 keys, defaulted for manifests saved earlier
-                "cum_appended_sq": ann_manifest.get(
-                    "cum_appended_sq", 0.0
-                ),
-                "cum_drift": ann_manifest.get("cum_drift"),
-                "filter_calibrations": ann_manifest.get(
-                    "filter_calibrations", {}
-                )
-                or {},
-            }
+            )
         return eng
 
     def save_matryoshka(

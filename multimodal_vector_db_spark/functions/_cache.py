@@ -16,16 +16,30 @@ Keys are the canonical string form of the arguments —
 so distinct input expressions never collide; non-Column arguments use
 ``repr``; nested lists (codebooks) are recursed. Anything that cannot
 be keyed bypasses the cache and builds normally.
+
+The memo is least-recently-used and holds at most ``CACHE_MAX_ENTRIES``
+Columns. Unbounded, it grew by one entry per distinct query vector (a
+``dot()`` against a 512-literal array keys on its ≈11 KB string) and
+kept each expression tree alive in the JVM through py4j for the life of
+the process.
 """
 
 from __future__ import annotations
 
 import functools
+import threading
+from collections import OrderedDict
 from typing import Callable
 
 from pyspark.sql import Column
 
-_CACHE: dict = {}
+#: LRU bound: building every registry query once (sf0.01) leaves 228
+#: entries, so a warm pass over the whole registry still hits each of
+#: them, with room to spare for the facade's per-query-vector Columns
+CACHE_MAX_ENTRIES = 512
+
+_CACHE: OrderedDict = OrderedDict()
+_LOCK = threading.Lock()
 
 
 def _key_part(a):
@@ -52,10 +66,16 @@ def cached_expr(fn: Callable) -> Callable:
             )
         except TypeError:
             return fn(*args, **kwargs)
-        out = _CACHE.get(key)
-        if out is None:
-            out = fn(*args, **kwargs)
-            _CACHE[key] = out
+        with _LOCK:
+            out = _CACHE.get(key)
+            if out is not None:
+                _CACHE.move_to_end(key)
+                return out
+        out = fn(*args, **kwargs)
+        with _LOCK:
+            out = _CACHE.setdefault(key, out)  # a racing build may win
+            if len(_CACHE) > CACHE_MAX_ENTRIES:
+                _CACHE.popitem(last=False)
         return out
 
     return wrapper

@@ -45,6 +45,20 @@ def morton_code_sql(a: str, b: str, bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+def int_in(col: str, values) -> Column:
+    """``col IN (v1, v2, ...)`` over integer ``values`` as ONE SQL
+    expression: one py4j call however many values, where
+    ``F.col(col).isin(values)`` sends each value to the JVM as its own
+    literal. Catalyst plans the same ``In`` predicate, so it still
+    pushes down to the scan. The column name is backquoted and every
+    value must pass ``int()``, so nothing but integers reaches the SQL
+    text. No values matches no row."""
+    vals = ", ".join(str(int(v)) for v in values)
+    if not vals:
+        return F.lit(False)
+    return F.expr(f"`{col.replace('`', '``')}` IN ({vals})")
+
+
 def zorder_repartition(
     df: DataFrame,
     col_a: str,

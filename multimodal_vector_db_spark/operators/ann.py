@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from multimodal_vector_db_spark.functions.layout import int_in
 from multimodal_vector_db_spark.functions.vector import dot
 from multimodal_vector_db_spark.operators.knn import (
     top_k_per_group,
@@ -720,7 +721,7 @@ def ivf_adc_search_blocked(
                         }
                     )
 
-    pruned = index.where(F.col(cluster_col).isin(probed)).select(
+    pruned = index.where(int_in(cluster_col, probed)).select(
         id_col, codes_col, cluster_col
     )
     local = pruned.mapInPandas(score, schema=out_schema)
@@ -910,9 +911,9 @@ def ivf_search_blocked(
                     }
                 )
 
-    pruned = assigned_corpus.where(
-        F.col(cluster_col).isin(probed)
-    ).select(id_col, vector_col, cluster_col)
+    pruned = assigned_corpus.where(int_in(cluster_col, probed)).select(
+        id_col, vector_col, cluster_col
+    )
     local = pruned.mapInPandas(score, schema=out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("id").asc()

@@ -8,7 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from multimodal_vector_db_spark.embedders.fake import fake_embed_numpy
-from multimodal_vector_db_spark.engine import MultiModalSearchEngine
+from multimodal_vector_db_spark.engine import (
+    MultiModalSearchEngine,
+    _payload_bytes,
+)
 
 
 @pytest.fixture(scope="module")
@@ -1301,14 +1304,14 @@ def test_cumulative_drift_latches_where_per_batch_does_not(spark):
     def embed(text, space):
         v = fake_embed_numpy(text, space, 16).astype(np.float64)
         if text.startswith("mid"):
-            v = v * 1.8  # ~3x the build cohesion: below the per-batch
-        return v.tolist()  # limit (6.0 here), above the cumulative 2.0
+            v = v * 1.8  # ~3.2x the build cohesion: below the per-batch
+        return v.tolist()  # limit (4.0), above the cumulative 2.5
 
     eng = MultiModalSearchEngine(
         spark, dim=16, blocked_threshold_cells=10, embed_fn=embed,
-        local_exact_budget_bytes=0, drift_threshold=6.0,
-        cum_drift_threshold=2.0,
+        local_exact_budget_bytes=0,
     )
+    assert eng.cum_drift_threshold == 2.5  # derived from drift_threshold
     eng.batch_ingest(
         [{"content": f"cum doc {i}", "modality": "text"}
          for i in range(120)]
@@ -1323,7 +1326,8 @@ def test_cumulative_drift_latches_where_per_batch_does_not(spark):
         )
         eng.search(f"cum doc {b}", k=3, recall_floor=0.95)
         # per-batch ratio stays under the per-batch limit throughout
-        assert info["drift"] is not None and info["drift"] < 6.0
+        assert info["drift"] is not None
+        assert info["drift"] < eng.drift_threshold
         if info["drifted"]:
             latched_at = b
             break
@@ -1410,7 +1414,7 @@ def test_ivf_plan_picks_cheapest_measured_point(spark):
 
 
 def test_stale_calibration_recalibrates_with_appended_ground_truth(spark):
-    """Once appended rows exceed recalibration_fraction of the
+    """Once appended rows exceed RECALIBRATION_FRACTION of the
     calibrated corpus, the route re-runs calibration on the CURRENT
     corpus: the reason logs it, rows_at_calibration moves to the new
     count, and appended ids are eligible as sampled calibration
@@ -1546,7 +1550,7 @@ def test_maintain_housekeeping_entry(spark):
     st = eng.maintain("clip")
     assert st["appended"] == 10 and not st["drifted"] and not st["rebuilt"]
 
-    # stale curve: grow past recalibration_fraction, maintain refreshes
+    # stale curve: grow past RECALIBRATION_FRACTION, maintain refreshes
     eng.batch_ingest(
         [{"content": f"mnt doc more {i}", "modality": "text"}
          for i in range(60)]
@@ -1771,10 +1775,11 @@ def test_compare_cache_survives_ingest_during_cache_build(spark,
 
 
 def test_missing_staleness_marker_counts_as_stale(spark):
-    """A main calibration curve with NO rows_at_calibration marker
-    (manifests saved before round 10, reloaded via load()) must be
-    treated as stale — matching the filter-curve semantics — so old
-    curves refresh instead of being trusted forever."""
+    """A main calibration curve with NO space_rows_at_calibration
+    marker (manifests saved before the marker existed, reloaded via
+    load()) must be treated as stale — the one rule every curve
+    follows — so old curves refresh instead of being trusted
+    forever."""
     eng = MultiModalSearchEngine(spark, dim=16, blocked_threshold_cells=10,
                                  local_exact_budget_bytes=0)
     eng.batch_ingest(
@@ -1783,11 +1788,13 @@ def test_missing_staleness_marker_counts_as_stale(spark):
     )
     eng.build_ann_index(space="clip", n_clusters=8, calibration_queries=8)
     info = eng._ann["clip"]
-    del info["calibration"]["rows_at_calibration"]
-    assert eng._main_curve_stale("clip", info) is True
+    assert eng._stale_curves("clip", info) == []
+    del info["calibration"]["space_rows_at_calibration"]
+    assert eng._stale_curves("clip", info) == [None]
     st = eng.maintain("clip")
     assert st["recalibrated"] is True
-    assert info["calibration"]["rows_at_calibration"] == 80
+    assert info["calibration"]["space_rows_at_calibration"] == 80
+    assert eng._stale_curves("clip", info) == []
 
 
 def test_micro_path_budget_counts_payload_bytes(spark):
@@ -1995,6 +2002,150 @@ def test_defer_recalibration_serves_exact_until_maintain(spark):
     # and the next search carries no leftover annotation
     lazy.search("dfl doc 7", k=3, recall_floor=0.5)
     assert "calibration_sec" not in lazy.last_route
+
+
+def test_removed_rows_do_not_stale_the_main_curve(spark):
+    """Every curve's staleness marker counts the space's rows the way
+    the staleness check does (removed rows included). A main curve
+    measured after removes is therefore fresh: searches with a floor
+    below 1 do not re-run the calibration sweep, and with deferred
+    recalibration they do not defer and maintain() has nothing to
+    refresh."""
+    eng = MultiModalSearchEngine(spark, dim=16, blocked_threshold_cells=10,
+                                 local_exact_budget_bytes=0)
+    eng.batch_ingest(
+        [{"content": f"rml doc {i}", "modality": "text"}
+         for i in range(200)]
+    )
+    eng.remove(list(range(0, 200, 3)))  # 67 removed, 133 live
+    eng.build_ann_index(space="clip", n_clusters=8, calibration_queries=16)
+    info = eng._ann["clip"]
+    cal = info["calibration"]
+    assert cal["rows_at_calibration"] == 133
+    for i in range(3):
+        eng.search(f"rml doc {3 * i + 1}", k=3, recall_floor=0.5)
+        assert "calibration_sec" not in eng.last_route, eng.last_route
+        assert "recalibrated" not in eng.last_route["reason"]
+    assert info["calibration"] is cal
+
+    eng.defer_recalibration = True
+    eng.search("rml doc 4", k=3, recall_floor=0.5)
+    assert "calibration_deferred" not in eng.last_route
+    for _ in range(2):
+        st = eng.maintain("clip")
+        assert st["recalibrated"] is False, st
+    assert info["calibration"] is cal
+    assert cal["space_rows_at_calibration"] == 200
+
+
+def test_main_and_filter_curves_refresh_in_one_pass(spark):
+    """A main and a filter curve measured at the same row count grow
+    stale together and one route pass re-measures both, each at its
+    own settings; the reported calibration cost covers both."""
+    eng = MultiModalSearchEngine(spark, dim=16, blocked_threshold_cells=10,
+                                 local_exact_budget_bytes=0)
+    eng.batch_ingest(
+        [{"content": f"mfr doc {i}", "modality": ["text", "image"][i % 2]}
+         for i in range(120)]
+    )
+    eng.build_ann_index(space="clip", n_clusters=8, calibration_queries=8,
+                        calibration_fractions=(0.25, 0.5),
+                        calibration_filters=("image",))
+    info = eng._ann["clip"]
+    cal0 = info["calibration"]
+    fcal0 = info["filter_calibrations"]["image"]
+    assert cal0["space_rows_at_calibration"] == 120
+    assert fcal0["space_rows_at_calibration"] == 120
+    eng.batch_ingest(
+        [{"content": f"mfr late {i}", "modality": ["text", "image"][i % 2]}
+         for i in range(60)]  # 50% growth > RECALIBRATION_FRACTION
+    )
+    assert eng._stale_curves("clip", info) == [None, "image"]
+    eng.search("mfr doc 4", k=3, recall_floor=0.5)
+    cal1 = info["calibration"]
+    fcal1 = info["filter_calibrations"]["image"]
+    assert cal1 is not cal0 and fcal1 is not fcal0
+    assert cal1["space_rows_at_calibration"] == 180
+    assert fcal1["space_rows_at_calibration"] == 180
+    assert cal1["rows_at_calibration"] == 180
+    assert fcal1["rows_at_calibration"] == 90
+    for new, old in ((cal1, cal0), (fcal1, fcal0)):
+        assert [p["fraction"] for p in new["points"]] == [0.25, 0.5]
+        assert (new["n_queries"], new["k"]) == (old["n_queries"], old["k"])
+    assert eng.last_route["calibration_sec"] == pytest.approx(
+        cal1["calibration_sec"] + fcal1["calibration_sec"], abs=2e-3
+    )
+    assert eng._stale_curves("clip", info) == []
+
+
+def test_corpus_rows_is_the_sum_of_space_counts(spark, tmp_path):
+    """The dispatch's corpus row count is derived from the per-space
+    counts, so on a loaded corpus the one groupBy job that fills them
+    answers both: _corpus_rows() runs no job of its own, before or
+    after a Spark-path search."""
+    eng = MultiModalSearchEngine(spark, dim=8)
+    eng.batch_ingest(
+        [{"content": f"crs doc {i}", "modality": ["text", "audio"][i % 2]}
+         for i in range(30)]
+    )
+    eng.remove([1, 2])
+    assert eng._corpus_rows() == 30
+    base = str(tmp_path / "wh_rows")
+    eng.save(base)
+    loaded = MultiModalSearchEngine.load(spark, base)
+    loaded.local_exact_budget_bytes = 0
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, "corpus row count")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(tracker.getJobIdsForGroup(group) or [])
+
+    n, n_jobs = jobs("rows_by_space", lambda: loaded._space_rows("clip"))
+    assert n == 15 and n_jobs >= 1
+    assert jobs("corpus_rows", loaded._corpus_rows) == (30, 0)
+    loaded.search("crs doc 4", k=2)
+    assert loaded.last_route["route"].startswith("exact-")
+    assert jobs("corpus_rows_after", loaded._corpus_rows) == (30, 0)
+    loaded.ingest_content("crs late", modality="audio")
+    assert loaded._corpus_rows() == 31
+
+
+def test_fetch_predicate_py4j_calls_do_not_grow_with_ids(
+    spark, monkeypatch
+):
+    """The payload fetch's ``id IN (...)`` predicate is one SQL
+    expression: building it costs the same py4j calls for 4 ids as for
+    128 (``isin`` sends each id as its own literal), and it selects
+    exactly the listed ids."""
+    from multimodal_vector_db_spark.functions.layout import int_in
+
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+
+    def calls(n):
+        sent = []
+
+        def counting(*a, **k):
+            sent.append(1)
+            return real(*a, **k)
+
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            int_in("id", list(range(n)))
+        return len(sent)
+
+    assert calls(4) == calls(40) == calls(128)
+    df = spark.range(200)
+    assert [r["id"] for r in df.where(int_in("id", [150, 3, 77])).collect()
+            ] == [3, 77, 150]
+    assert df.where(int_in("id", [])).count() == 0
+    with pytest.raises(ValueError):
+        int_in("id", ["1) OR (1 = 1"])
 
 
 def test_blas_clamp_two_regime(spark):
@@ -2421,9 +2572,7 @@ def test_micro_path_footprint_counts_float64_resident_bytes(spark):
     eng.search("fp64 doc 3", k=2)
     cache = eng._local_cache["clip"]
     assert cache["emb"].dtype.itemsize == 8
-    payload_est = sum(
-        eng._row_payload_bytes(p) for p in cache["payload"]
-    )
+    payload_est = sum(_payload_bytes(p) for p in cache["payload"])
     assert cache["bytes"] == cache["emb"].nbytes + payload_est
 
     # a budget sized between the float32 and float64 vector terms must

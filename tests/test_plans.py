@@ -306,3 +306,17 @@ def test_blocked_payload_fetch_pushes_in_filter(spark):
     assert re.search(r"PushedFilters: \[.*[Ii]n\(vec_id", p), p
     m = re.search(r"ReadSchema: struct<([^>]*)", p)
     assert m and "embedding" not in m.group(1), p
+
+
+def test_int_in_predicate_pushes_to_scan(spark):
+    """The one-expression integer ``IN`` predicate (the engine's payload
+    fetch and tombstones, the IVF probe filters) plans the same pushed
+    scan filter as ``isin``."""
+    from multimodal_vector_db_spark.functions.layout import int_in
+
+    docs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    fetch = docs.select("vec_id", "label").where(int_in("vec_id", [1, 5, 9]))
+    p = _explain(fetch)
+    assert re.search(r"PushedFilters: \[.*[Ii]n\(vec_id", p), p
+    m = re.search(r"ReadSchema: struct<([^>]*)", p)
+    assert m and "embedding" not in m.group(1), p

@@ -55,3 +55,35 @@ def test_ensure_parallelism_memo_matches_plan(spark):
     # already-parallel input passes through untouched (no shuffle added)
     wide = df.repartition(n_true + 4)
     assert ensure_parallelism(wide, min_partitions=2) is wide
+
+
+def test_expr_cache_is_lru_bounded(monkeypatch, spark):
+    """The Column-factory memo evicts least-recently-used entries at
+    its bound: building more distinct ``dot()`` Columns than the bound
+    keeps it at the bound, a repeated build returns the identical
+    object, and a hit refreshes an entry's recency."""
+    from collections import OrderedDict
+
+    from multimodal_vector_db_spark.functions import _cache
+    from multimodal_vector_db_spark.functions.vector import dot
+
+    monkeypatch.setattr(_cache, "_CACHE", OrderedDict())
+    monkeypatch.setattr(_cache, "CACHE_MAX_ENTRIES", 8)
+
+    def q(i):
+        return F.array(*[F.lit(float(i + j)) for j in range(4)])
+
+    first = dot("embedding", q(0))
+    assert dot("embedding", q(0)) is first
+    built = {}
+    for i in range(1, 20):
+        built[i] = dot("embedding", q(i))
+        dot("embedding", q(0))  # a hit keeps the first entry recent
+        assert len(_cache._CACHE) <= 8
+    assert len(_cache._CACHE) == 8
+    assert dot("embedding", q(0)) is first
+    # entry 1 was least recently used, so it was evicted and rebuilds
+    one = dot("embedding", q(1))
+    assert one is not built[1]
+    assert dot("embedding", q(1)) is one
+    assert len(_cache._CACHE) == 8
